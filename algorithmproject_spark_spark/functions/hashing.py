@@ -17,25 +17,49 @@ BIGINT overflow for any multiplier < 2^31.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
 MOD = 2_147_483_647  # 2^31 - 1
 MULT = 31
 GRAM_MULT = 1_000_003  # combines token hashes into n-gram hashes
 
+# Every kernel has two forms: ``ss_*`` renders Spark-SQL text, ``sql_*``
+# the DuckDB oracle's text. The Spark form is text, not Column-API
+# calls, because the Column API costs one py4j round-trip per nested
+# F.* call — for the text-hash pipelines seconds of DRIVER time per
+# query build — while one F.expr()/selectExpr parse of the same
+# expression is milliseconds.
 
-def char_fold_hash(col: Column, mult: int = MULT, mod: int = MOD) -> Column:
-    """Polynomial hash of a string column, computed as a sequential
-    fold — identical left-to-right order in any engine."""
-    return F.aggregate(
-        F.transform(F.split(col, ""), lambda ch: F.ascii(ch).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(mult) + c) % F.lit(mod),
+
+def ss_bind(expr: str, var: str, body: str) -> str:
+    """Evaluate ``expr`` ONCE per row and bind the value to lambda
+    variable ``var`` inside ``body``.
+
+    Why this exists: Catalyst's CollapseProject inlines a projected
+    expression into every downstream reference, and
+    InferFiltersFromGenerate copies a generator's child into a Filter
+    — an expression referenced k times is EVALUATED k times. For the
+    interpreted HOF hash pipelines here that multiplies the per-char
+    fold ~30× (measured: doc_dup_span_stats gram build 5.6 s → 0.6 s
+    at sf0.1 after binding). ``transform`` over a 1-element array
+    binds the value to a lambda VARIABLE — references inside ``body``
+    are O(1) variable lookups, not subtree re-evaluations — making this
+    a zero-shuffle, engine-side common-subexpression barrier."""
+    return f"element_at(transform(array({expr}), {var} -> {body}), 1)"
+
+
+def ss_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
+    """Polynomial hash of a string expression, computed as a sequential
+    fold — identical left-to-right order in any engine. ``ascii('')``
+    is 0 in Spark, so no empty-token CASE is needed here (that guard is
+    DuckDB-side only, see :func:`sql_char_fold_hash`)."""
+    return (
+        f"aggregate(transform(split({expr}, ''), "
+        f"c_ -> CAST(ascii(c_) AS BIGINT)), CAST(0 AS BIGINT), "
+        f"(acc_, c_) -> (acc_ * {mult} + c_) % {mod})"
     )
 
 
 def sql_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
-    """DuckDB twin of :func:`char_fold_hash`.
+    """DuckDB twin of :func:`ss_char_fold_hash`.
 
     Empty-string edge (round-9 review finding): both engines split ''
     into [''], but Spark ``ascii('')`` is 0 while DuckDB ``unicode('')``
@@ -52,53 +76,36 @@ def sql_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
     )
 
 
-def token_hash_array(tokens: Column, mult: int = MULT, mod: int = MOD) -> Column:
-    """Hash every token of an array column (nested HOF — still no UDF)."""
-    return F.transform(tokens, lambda t: char_fold_hash(t, mult, mod))
-
-
-# --------------------------------------------------------------------------
-# Spark-SQL TEXT twins (ss_*) of the Column builders above — same
-# rationale as functions/vectors.py's ss_* family: the Column API costs
-# one py4j round-trip per nested F.* call, which for the text-hash
-# pipelines means seconds of DRIVER time per query build; one F.expr()
-# parse of the identical expression is milliseconds. The parsed trees
-# resolve to the same Catalyst operators with the same fold order and
-# integer ops, so results are bit-identical (oracle-gated on every
-# consumer).
-# --------------------------------------------------------------------------
-
-
-def ss_bind(expr: str, var: str, body: str) -> str:
-    """Text twin of :func:`bind_once`: evaluate ``expr`` once, bind it
-    to lambda variable ``var`` inside ``body``."""
-    return f"element_at(transform(array({expr}), {var} -> {body}), 1)"
-
-
-def ss_char_fold_hash(expr: str, mult: int = MULT, mod: int = MOD) -> str:
-    """Spark-SQL text twin of :func:`char_fold_hash` (same sequential
-    fold; ``ascii('')`` is 0 in Spark so no empty-token CASE needed —
-    that guard is DuckDB-side only)."""
-    return (
-        f"aggregate(transform(split({expr}, ''), "
-        f"c_ -> CAST(ascii(c_) AS BIGINT)), CAST(0 AS BIGINT), "
-        f"(acc_, c_) -> (acc_ * {mult} + c_) % {mod})"
-    )
-
-
 def ss_token_hash_array(tokens: str, mult: int = MULT, mod: int = MOD) -> str:
-    """Text twin of :func:`token_hash_array`."""
+    """Hash every token of an array expression (nested HOF — no UDF)."""
     return f"transform({tokens}, t_ -> {ss_char_fold_hash('t_', mult, mod)})"
+
+
+def sql_token_hash_array(tokens_expr: str, mult: int = MULT, mod: int = MOD) -> str:
+    return f"list_transform({tokens_expr}, t_ -> {sql_char_fold_hash('t_', mult, mod)})"
 
 
 def ss_gram_hash_array(
     th: str, n: int, mult: int = GRAM_MULT, mod: int = MOD
 ) -> str:
-    """Text twin of :func:`gram_hash_array` over an already-bound
-    token-hash array variable ``th`` — identical n-1 zip_with passes
-    over shifted slices (same fold math). The count/slice expressions
-    are textually repeated; they are O(1) array-length reads, not the
-    upstream fold the Column form's bind protects."""
+    """n-gram hashes composed from token hashes.
+
+    Formulated as n-1 ``zip_with`` passes over shifted slices rather
+    than an ``aggregate`` per window: HOF lambdas are interpreted (not
+    codegen'd), so per-window aggregates cost ~50 expression
+    evaluations each — the zip_with form does 3 array ops per ROW and
+    measured ~30× faster at sf0.1. Fold math is identical:
+    ((h0*G + h1) % M * G + h2) % M.
+
+    ``th`` must be an already-bound variable (see :func:`ss_bind`): the
+    composition references it 2(n-1) times, and inlined, Catalyst would
+    re-run the full upstream token-hash fold per reference. The
+    count/slice expressions are textually repeated; they are O(1)
+    array-length reads.
+
+    ``greatest(count, 0)`` makes short docs yield empty arrays instead
+    of tripping ANSI slice errors (and avoids Spark's descending
+    ``sequence(1, 0)`` trap)."""
     count = f"greatest(size({th}) - {n - 1}, 0)"
     acc = f"slice({th}, 1, {count})"
     for k in range(1, n):
@@ -109,70 +116,10 @@ def ss_gram_hash_array(
     return acc
 
 
-def ss_minhash_value(hashes: str, a: int, b: int, mod: int = MOD) -> str:
-    """Text twin of :func:`minhash_value` — same affine map + array_min."""
-    return f"array_min(transform({hashes}, h_ -> ({a} * h_ + {b}) % {mod}))"
-
-
-def sql_token_hash_array(tokens_expr: str, mult: int = MULT, mod: int = MOD) -> str:
-    return f"list_transform({tokens_expr}, t_ -> {sql_char_fold_hash('t_', mult, mod)})"
-
-
-def bind_once(col: Column, f) -> Column:
-    """Evaluate ``col`` ONCE per row and hand the bound VALUE to ``f``.
-
-    Why this exists: Catalyst's CollapseProject inlines a projected
-    expression into every downstream reference, and
-    InferFiltersFromGenerate copies a generator's child into a Filter
-    — an expression referenced k times is EVALUATED k times. For the
-    interpreted HOF hash pipelines here that multiplies the per-char
-    fold ~30× (measured: doc_dup_span_stats gram build 5.6 s → 0.6 s
-    at sf0.1 after binding). ``transform`` over a 1-element array
-    binds the value to a lambda VARIABLE — references inside ``f`` are
-    O(1) variable lookups, not subtree re-evaluations — making this a
-    zero-shuffle, engine-side common-subexpression barrier.
-    """
-    return F.get(F.transform(F.array(col), f), 0)
-
-
-def gram_hash_array(
-    token_hashes: Column, n: int, mult: int = GRAM_MULT, mod: int = MOD
-) -> Column:
-    """n-gram hashes composed from token hashes.
-
-    Formulated as n-1 ``zip_with`` passes over shifted slices rather
-    than an ``aggregate`` per window: HOF lambdas are interpreted (not
-    codegen'd), so per-window aggregates cost ~50 expression
-    evaluations each — the zip_with form does 3 array ops per ROW and
-    measured ~30× faster at sf0.1. Fold math is identical:
-    ((h0*G + h1) % M * G + h2) % M.
-
-    The input array is bound once (:func:`bind_once`) because the
-    composition references it 2(n-1) times — inlined, Catalyst would
-    re-run the full upstream token-hash fold per reference.
-
-    ``greatest(count, 0)`` makes short docs yield empty arrays instead
-    of tripping ANSI slice errors (and avoids Spark's descending
-    ``sequence(1, 0)`` trap).
-    """
-
-    def compose(th: Column) -> Column:
-        count = F.greatest(F.size(th) - F.lit(n - 1), F.lit(0))
-        acc = F.slice(th, 1, count)
-        for k in range(1, n):
-            nxt = F.slice(th, F.lit(k + 1), count)
-            acc = F.zip_with(
-                acc, nxt, lambda a, b: (a * F.lit(mult) + b) % F.lit(mod)
-            )
-        return acc
-
-    return bind_once(token_hashes, compose)
-
-
 def sql_gram_hash_array(
     th_expr: str, n: int, mult: int = GRAM_MULT, mod: int = MOD
 ) -> str:
-    """DuckDB twin of :func:`gram_hash_array`."""
+    """DuckDB twin of :func:`ss_gram_hash_array`."""
     return (
         f"list_transform(range(1, len({th_expr}) - {n} + 2), "
         f"i__ -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice({th_expr}, i__, i__ + {n - 1})), "
@@ -193,11 +140,9 @@ MINHASH_PARAMS: tuple[tuple[int, int], ...] = (
 )
 
 
-def minhash_value(hashes: Column, a: int, b: int, mod: int = MOD) -> Column:
+def ss_minhash_value(hashes: str, a: int, b: int, mod: int = MOD) -> str:
     """min over the token-hash array of one affine permutation."""
-    return F.array_min(
-        F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(mod))
-    )
+    return f"array_min(transform({hashes}, h_ -> ({a} * h_ + {b}) % {mod}))"
 
 
 def sql_minhash_value(hashes_expr: str, a: int, b: int, mod: int = MOD) -> str:

@@ -14,40 +14,15 @@ result is independent of partitioning AND matches DuckDB exactly at any
 scale factor. Never use double→decimal casts for this: Spark casts via
 the shortest decimal string (HALF_UP) while DuckDB rounds the true
 binary value, so they disagree on e.g. 1.115.
+
+Every kernel has two forms: ``ss_*`` renders Spark-SQL text (callers
+wrap it in ``F.expr`` or inline it into ``selectExpr`` — one parse in
+the JVM instead of one py4j round-trip per nested ``F.*`` call) and
+``sql_*`` renders the DuckDB oracle's text. Arguments are SQL
+expression strings; each is parenthesized where it is substituted.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, functions as F
-
-
-def scaled_long(col: Column | str, scale: int = 100) -> Column:
-    """Per-row fixed-point conversion: double → exact BIGINT at `scale`.
-
-    floor(x*scale + 0.5) instead of round(): Spark's round() goes
-    through BigDecimal.valueOf (shortest string repr, HALF_UP) and can
-    disagree with a C implementation on boundary representations;
-    floor(+0.5) is pure IEEE and engine-independent.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * F.lit(float(scale)) + F.lit(0.5)).cast("long")
-
-
-def sum_money(col: Column | str, scale: int = 100) -> Column:
-    """Exact sum of a fixed-decimal double column, as scaled BIGINT."""
-    return F.sum(scaled_long(col, scale))
-
-
-def unscale(col: Column, scale: int = 100) -> Column:
-    """Scaled BIGINT → double via ONE division (deterministic)."""
-    return col / F.lit(float(scale))
-
-
-def micros(col: Column) -> Column:
-    """Deterministic 6-decimal fixed-point of an already-deterministic
-    double expression (e.g. a sequential fold): BIGINT micro-units."""
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-
 
 #: Knuth's multiplicative-hash constant (2^32 / golden ratio).
 HASH_MULT = 2654435761
@@ -58,109 +33,66 @@ HASH_MULT = 2654435761
 HASH_REDUCE = 1000003  # prime
 
 
-def hash_mod(key: Column | str, mod: int) -> Column:
+def ss_scaled_long(expr: str, scale: int = 100) -> str:
+    """Per-row fixed-point conversion: double → exact BIGINT at `scale`.
+
+    floor(x*scale + 0.5) instead of round(): Spark's round() goes
+    through BigDecimal.valueOf (shortest string repr, HALF_UP) and can
+    disagree with a C implementation on boundary representations;
+    floor(+0.5) is pure IEEE and engine-independent. The D-suffixed
+    literals keep the multiply/add in DOUBLE."""
+    return f"CAST(floor(({expr}) * {float(scale)!r}D + 0.5D) AS BIGINT)"
+
+
+def sql_scaled_long(expr: str, scale: int = 100) -> str:
+    """DuckDB twin of :func:`ss_scaled_long` (same IEEE ops)."""
+    return f"CAST(floor(({expr}) * {scale}.0 + 0.5) AS BIGINT)"
+
+
+def ss_micros(expr: str) -> str:
+    """Deterministic 6-decimal fixed-point of an already-deterministic
+    double expression (e.g. a sequential fold): BIGINT micro-units.
+    floor(double) already returns BIGINT in Spark; the CAST states the
+    result type."""
+    return f"CAST(floor(({expr}) * 1000000.0D + 0.5D) AS BIGINT)"
+
+
+def sql_micros(expr: str) -> str:
+    """DuckDB twin of :func:`ss_micros`."""
+    return f"CAST(floor(({expr}) * 1000000.0 + 0.5) AS BIGINT)"
+
+
+def ss_hash_mod(expr: str, mod: int) -> str:
     """Deterministic, overflow-safe multiplicative hash bucket of a
     BIGINT key: ((key % HASH_REDUCE) * HASH_MULT) % mod.
 
     The engine-portable sampler primitive: stable under re-runs,
     repartitioning, and engine changes (what a training split needs;
-    ``sample()`` is none of those). Keep the SQL twin
-    :func:`sql_hash_mod` textually in sync.
-    """
-    c = F.col(key) if isinstance(key, str) else key
-    return ((c % HASH_REDUCE) * F.lit(HASH_MULT)) % mod
-
-
-def sql_hash_mod(expr: str, mod: int) -> str:
-    """DuckDB-side twin of :func:`hash_mod`."""
-    return f"((({expr}) % {HASH_REDUCE}) * {HASH_MULT}) % {mod}"
-
-
-def sql_scaled_long(expr: str, scale: int = 100) -> str:
-    """DuckDB-side twin of :func:`scaled_long` (same IEEE ops)."""
-    return f"CAST(floor(({expr}) * {scale}.0 + 0.5) AS BIGINT)"
-
-
-def sql_micros(expr: str) -> str:
-    """DuckDB-side twin of :func:`micros`."""
-    return f"CAST(floor(({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-
-
-def ss_micros(expr: str) -> str:
-    """Spark-SQL TEXT twin of :func:`micros` — for F.expr()-built
-    kernels (see functions/vectors.py ss_* rationale). floor(double)
-    already returns BIGINT in Spark; the CAST mirrors the Column
-    version's no-op .cast('long') for textual clarity."""
-    return f"CAST(floor(({expr}) * 1000000.0D + 0.5D) AS BIGINT)"
-
-
-def ss_scaled_long(expr: str, scale: int = 100) -> str:
-    """Spark-SQL TEXT twin of :func:`scaled_long` (r13 one-parse
-    builds): same IEEE multiply/add/floor, D-suffixed double literals
-    matching F.lit(float(scale)) bit-for-bit."""
-    return f"CAST(floor(({expr}) * {float(scale)!r}D + 0.5D) AS BIGINT)"
-
-
-def ss_hash_mod(expr: str, mod: int) -> str:
-    """Spark-SQL TEXT twin of :func:`hash_mod`. The multiplier exceeds
-    INT32, so the SQL literal parses as BIGINT — the same LongType
-    F.lit ships."""
+    ``sample()`` is none of those). The multiplier exceeds INT32, so
+    the SQL literal parses as BIGINT."""
     return f"(((({expr}) % {HASH_REDUCE}) * {HASH_MULT}) % {mod})"
 
 
+def sql_hash_mod(expr: str, mod: int) -> str:
+    """DuckDB twin of :func:`ss_hash_mod`."""
+    return f"((({expr}) % {HASH_REDUCE}) * {HASH_MULT}) % {mod}"
+
+
 def ss_floordiv(num: str, den: str) -> str:
-    """Spark-SQL TEXT twin of :func:`floordiv` — SQL's exact
-    IntegralDivide, the same function call_function('div', ...)
-    reaches."""
-    return f"(({num}) div ({den}))"
+    """BIGINT floor division of non-negative operands — SQL's exact
+    ``div`` (IntegralDivide).
 
-
-def ss_ppm(count_expr: str, total_expr: str) -> str:
-    """Spark-SQL TEXT twin of :func:`ppm` (same 1000×1000 split, same
-    precondition count <= total)."""
-    c1k, t = f"(({count_expr}) * 1000)", f"({total_expr})"
-    return f"(({c1k} div {t}) * 1000 + (({c1k} % {t}) * 1000) div {t})"
-
-
-def ss_ratio_e6(num_expr: str, den_expr: str) -> str:
-    """Spark-SQL TEXT twin of :func:`ratio_e6` (same q/r split)."""
-    n, d = f"({num_expr})", f"({den_expr})"
-    r1k = f"(({n} % {d}) * 1000)"
-    return (
-        f"(({n} div {d}) * 1000000 + ({r1k} div {d}) * 1000 "
-        f"+ (({r1k} % {d}) * 1000) div {d})"
-    )
-
-
-def ss_ppm_wide(count_expr: str, total_expr: str) -> str:
-    """Spark-SQL TEXT twin of :func:`ppm_wide` (same six ×10 long-
-    division steps; the accumulator nests textually exactly like the
-    Column fold)."""
-    t = f"({total_expr})"
-    r = f"({count_expr})"
-    acc = "CAST(0 AS BIGINT)"
-    for _ in range(6):
-        acc = f"(({acc}) * 10 + ((({r}) * 10) div {t}))"
-        r = f"((({r}) * 10) % {t})"
-    return acc
-
-
-def floordiv(num: Column, den: Column) -> Column:
-    """BIGINT floor division of non-negative Columns — SQL's exact
-    ``div`` (IntegralDivide), reached via ``call_function`` since
-    PySpark exposes no Column operator for it.
-
-    NEVER write this as ``((num - num % den) / den).cast("long")``:
+    NEVER write this as ``CAST((num - num % den) / den AS BIGINT)``:
     Spark's ``/`` on longs is DOUBLE division, and once the (exactly
     divisible) numerator exceeds 2^53 the quotient can land one ulp
     low and truncate to q-1 — found by adversarial review with the
     counterexample ppm(148511503890311, 166822422712862) = 889237
     instead of the exact 890237, a silent cross-engine divergence
     against DuckDB's exact ``//`` (pinned in tests/test_numeric_div.py)."""
-    return F.call_function("div", num, den)
+    return f"(({num}) div ({den}))"
 
 
-def ppm(count: Column, total: Column) -> Column:
+def ss_ppm(count_expr: str, total_expr: str) -> str:
     """EXACT floor(count * 1e6 / total) with bounded intermediates.
 
     The naive ``count * 1000000`` wraps BIGINT once count exceeds
@@ -179,16 +111,13 @@ def ppm(count: Column, total: Column) -> Column:
     safe for totals up to ~9.2e15, three orders of magnitude past a
     100 TB corpus's token count (~2.5e13). Without the precondition
     (count >> total) the q*1000 step can wrap — caught by the
-    hypothesis property test. Keep :func:`sql_ppm` textually in
-    sync."""
-    c1k = count * F.lit(1000)
-    q = floordiv(c1k, total)
-    r = c1k % total
-    return q * F.lit(1000) + floordiv(r * F.lit(1000), total)
+    hypothesis property test."""
+    c1k, t = f"(({count_expr}) * 1000)", f"({total_expr})"
+    return f"(({c1k} div {t}) * 1000 + (({c1k} % {t}) * 1000) div {t})"
 
 
 def sql_ppm(count_expr: str, total_expr: str) -> str:
-    """DuckDB twin of :func:`ppm` (same two-step exact scaling).
+    """DuckDB twin of :func:`ss_ppm` (same two-step exact scaling).
 
     The result is CAST to BIGINT: DuckDB promotes arithmetic over
     SUM()-derived operands to HUGEINT, which the driver's hash
@@ -197,13 +126,13 @@ def sql_ppm(count_expr: str, total_expr: str) -> str:
     return f"CAST(({c} // {t}) * 1000 + (({c} % {t}) * 1000) // {t} AS BIGINT)"
 
 
-def ratio_e6(num: Column, den: Column) -> Column:
+def ss_ratio_e6(num_expr: str, den_expr: str) -> str:
     """EXACT floor(num * 1e6 / den) for RATIOS — num may exceed den
-    (ppm()'s precondition is count ≤ total; a per-token tf/df
+    (ss_ppm's precondition is count ≤ total; a per-token tf/df
     burstiness ratio violates it by definition, r9 advice).
 
     Split off the integer part first — q = num div den, r = num % den —
-    then scale the sub-1 remainder with ppm()'s 1000×1000 split:
+    then scale the sub-1 remainder with ss_ppm's 1000×1000 split:
 
         floor(num*1e6/den) = q*1e6
                            + ((r*1000) div den)*1000
@@ -214,20 +143,17 @@ def ratio_e6(num: Column, den: Column) -> Column:
     totals are ~2.5e13 and the naive num*1000000 (which wraps at
     ~9.2e12) is exactly the overflow this replaces. q*1e6 still needs
     the final ratio < ~9.2e12 — a burstiness (mean repeats per doc)
-    that large is not a real corpus. Keep :func:`sql_ratio_e6`
-    textually in sync."""
-    q = floordiv(num, den)
-    r = num % den
-    r1k = r * F.lit(1000)
+    that large is not a real corpus."""
+    n, d = f"({num_expr})", f"({den_expr})"
+    r1k = f"(({n} % {d}) * 1000)"
     return (
-        q * F.lit(1_000_000)
-        + floordiv(r1k, den) * F.lit(1000)
-        + floordiv((r1k % den) * F.lit(1000), den)
+        f"(({n} div {d}) * 1000000 + ({r1k} div {d}) * 1000 "
+        f"+ (({r1k} % {d}) * 1000) div {d})"
     )
 
 
 def sql_ratio_e6(num_expr: str, den_expr: str) -> str:
-    """DuckDB twin of :func:`ratio_e6` (same q/r + 1000×1000 split).
+    """DuckDB twin of :func:`ss_ratio_e6` (same q/r + 1000×1000 split).
 
     Operands are widened to BIGINT here rather than at every call site:
     DuckDB types small-integer expressions INT32, and the q*1e6 term
@@ -242,10 +168,10 @@ def sql_ratio_e6(num_expr: str, den_expr: str) -> str:
     )
 
 
-def ppm_wide(count: Column, total: Column) -> Column:
-    """EXACT floor(count * 1e6 / total) for totals ppm() cannot reach.
+def ss_ppm_wide(count_expr: str, total_expr: str) -> str:
+    """EXACT floor(count * 1e6 / total) for totals ss_ppm cannot reach.
 
-    ppm()'s 1000×1000 split needs total ≤ 9.2e15; quadratic-in-scale
+    ss_ppm's 1000×1000 split needs total ≤ 9.2e15; quadratic-in-scale
     denominators (Gini's n·Σv, any count×sum product) breach that at
     sf1 already — found by the multi-scale oracle gate, not reasoned
     post-hoc. Six ×10 long-division steps keep every intermediate
@@ -255,16 +181,17 @@ def ppm_wide(count: Column, total: Column) -> Column:
 
     PRECONDITION: 0 ≤ count < total (a strict proportion — each digit
     is then ≤ 9 and the accumulator ≤ 999999)."""
-    r = count
-    acc = F.lit(0).cast("long")
+    t = f"({total_expr})"
+    r = f"({count_expr})"
+    acc = "CAST(0 AS BIGINT)"
     for _ in range(6):
-        acc = acc * F.lit(10) + floordiv(r * F.lit(10), total)
-        r = (r * F.lit(10)) % total
+        acc = f"(({acc}) * 10 + ((({r}) * 10) div {t}))"
+        r = f"((({r}) * 10) % {t})"
     return acc
 
 
 def sql_ppm_wide(count_expr: str, total_expr: str) -> str:
-    """DuckDB twin of :func:`ppm_wide` (same six ×10 steps; remainder
+    """DuckDB twin of :func:`ss_ppm_wide` (same six ×10 steps; remainder
     chains are nested textually — each level references the previous
     remainder once, so the expression stays linear in depth)."""
     t = f"({total_expr})"

@@ -20,16 +20,15 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import micros, sql_micros
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
     EMB_DIM,
-    cosine,
     sql_cosine,
     ss_arr,
+    ss_cosine,
     ss_to_double,
-    to_double,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -62,34 +61,14 @@ def _ss_plane_bits(v: str, planes) -> str:
 
 
 def ss_bucket(emb: str) -> str:
-    """Text twin of :func:`bucket_col` (same once-widened binding)."""
+    """LSH bucket id: bit j = sign(dot(v, plane_j)).
+
+    The widened vector is lambda-bound so the widening runs once, not
+    once per plane fold (CollapseProject inlines aliases per reference)."""
     return (
         f"element_at(transform(array({ss_to_double(emb)}), "
         f"v -> {_ss_plane_bits('v', PLANES)}), 1)"
     )
-
-
-def bucket_col(emb: Column | str) -> Column:
-    """LSH bucket id: bit j = sign(dot(v, plane_j)).
-
-    The widened vector is lambda-bound so ``to_double`` runs once, not
-    once per plane fold (CollapseProject inlines aliases per reference).
-    A string input (column name) takes the one-parse F.expr path.
-    """
-    if isinstance(emb, str):
-        return F.expr(ss_bucket(emb))
-
-    def _buckets(v: Column) -> Column:
-        acc = F.lit(0)
-        for j, plane in enumerate(PLANES):
-            pl = F.array(*[F.lit(x) for x in plane])
-            d = F.aggregate(
-                F.zip_with(v, pl, lambda x, y: x * y), F.lit(0.0), lambda a, b: a + b
-            )
-            acc = acc + F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        return acc
-
-    return F.element_at(F.transform(F.array(to_double(emb)), _buckets), 1)
 
 
 def sql_bucket(emb: str) -> str:
@@ -108,7 +87,9 @@ def sql_bucket(emb: str) -> str:
 
 def bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select("vec_id", "label", "embedding", bucket_col("embedding").alias("bucket"))
+    return emb.select(
+        "vec_id", "label", "embedding", F.expr(ss_bucket("embedding")).alias("bucket")
+    )
 
 
 _SQL_BUCKETED = "SELECT vec_id, label, embedding, {b} AS bucket FROM embeddings"
@@ -157,7 +138,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            micros(cosine("q_emb", "embedding")).alias("cosine_e6"),
+            F.expr(ss_micros(ss_cosine("q_emb", "embedding"))).alias("cosine_e6"),
         )
     )
     w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
@@ -215,17 +196,6 @@ def _band_planes(band: int, rows: int) -> list[tuple[float, ...]]:
     planes = _nd_planes(band * rows + rows)[band * rows : band * rows + rows]
     assert len(planes) == rows  # lazy generation: a short slice is impossible
     return planes
-
-
-def _band_bucket_col(v: Column, band: int, rows: int) -> Column:
-    acc = F.lit(0)
-    for j, plane in enumerate(_band_planes(band, rows)):
-        pl = F.array(*[F.lit(x) for x in plane])
-        d = F.aggregate(
-            F.zip_with(v, pl, lambda x, y: x * y), F.lit(0.0), lambda a, b: a + b
-        )
-        acc = acc + F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return acc
 
 
 def _sql_band_bucket(emb: str, band: int, rows: int) -> str:
@@ -303,7 +273,7 @@ def near_dup_pairs(
         .select(
             "vec_a",
             "vec_b",
-            micros(cosine("e_a", "e_b")).alias("cosine_e6"),
+            F.expr(ss_micros(ss_cosine("e_a", "e_b"))).alias("cosine_e6"),
         )
         .filter(F.col("cosine_e6") >= threshold_e6)
     )

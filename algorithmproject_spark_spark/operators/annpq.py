@@ -34,16 +34,15 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import micros, sql_micros, ss_micros
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
     EMB_DIM,
-    l2sq,
     sql_l2sq,
     ss_arr,
+    ss_l2sq,
     ss_to_double,
-    to_double,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -65,66 +64,19 @@ CODEBOOKS: tuple[tuple[tuple[float, ...], ...], ...] = tuple(
 )
 
 
-def _cb_lit(j: int) -> Column:
-    """Codebook j as ONE nested literal array<array<double>> — a single
-    Literal node feeding a single-lambda transform, instead of K
-    separate fold subtrees over K·SUB_DIM CreateArray nodes. Expression
-    tree (and task-binary/codegen) size drops ~16×; the per-code fold
-    copies cost ~13 s of plan overhead at sf0.1 before compaction."""
-    return F.lit([list(cvec) for cvec in CODEBOOKS[j]])
-
-
-def _fold_l2(sub: Column, cb: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(sub, cb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
-def _dists_2d(v: Column) -> Column:
-    """array[j][c] of micros(subspace distance) for a bound widened
-    vector — the shared PQ kernel: M transform-lambdas, one fold each.
-    The subvector slices are bound once through the inner lambda."""
-    subs = F.array(*[F.slice(v, j * SUB_DIM + 1, SUB_DIM) for j in range(M_SUB)])
-    return F.element_at(
-        F.transform(
-            F.array(subs),
-            lambda s: F.array(
-                *[
-                    F.transform(
-                        _cb_lit(j),
-                        lambda cb: micros(_fold_l2(F.element_at(s, j + 1), cb)),
-                    )
-                    for j in range(M_SUB)
-                ]
-            ),
-        ),
-        1,
-    )
-
-
-def _enc_from_dists(dists: Column) -> Column:
-    """array of M argmin encodings d·K + c from the 2-D distance array
-    (two-arg transform lambda supplies the code index)."""
-    return F.transform(
-        dists,
-        lambda dj: F.array_min(
-            F.transform(dj, lambda d, i: d * F.lit(K_PQ) + i.cast("long"))
-        ),
-    )
-
-
-# Spark-SQL TEXT twins (see functions/vectors.py ss_* rationale: the
-# Column forms of these kernels cost thousands of py4j round-trips —
+# Spark-SQL TEXT kernels (see functions/vectors.py ss_* rationale: the
+# Column-API form of these kernels cost thousands of py4j round-trips —
 # the measured bulk of this family's bench time at sf0.1; the text
-# forms parse once in the JVM and resolve to the identical Catalyst
-# trees, so values are bit-exact).
+# parses once in the JVM).
 
 
 def _ss_cb(j: int) -> str:
-    """Codebook j as array(array(...)) text — constant-folds to the
-    same nested-array value `_cb_lit` ships as one Literal."""
+    """Codebook j as ONE nested array<array<double>> — constant-folds to
+    a single Literal node feeding a single-lambda transform, instead of
+    K separate fold subtrees over K·SUB_DIM CreateArray nodes.
+    Expression tree (and task-binary/codegen) size drops ~16×; the
+    per-code fold copies cost ~13 s of plan overhead at sf0.1 before
+    compaction."""
     return "array(" + ", ".join(ss_arr(cvec) for cvec in CODEBOOKS[j]) + ")"
 
 
@@ -136,7 +88,9 @@ def _ss_fold_l2(sub: str, cb: str) -> str:
 
 
 def _ss_dists_2d(v: str) -> str:
-    """Text twin of :func:`_dists_2d` for a bound widened vector."""
+    """array[j][c] of micros(subspace distance) for a bound widened
+    vector — the shared PQ kernel: M transform-lambdas, one fold each.
+    The subvector slices are bound once through the inner lambda."""
     subs = "array(" + ", ".join(
         f"slice({v}, {j * SUB_DIM + 1}, {SUB_DIM})" for j in range(M_SUB)
     ) + ")"
@@ -149,7 +103,8 @@ def _ss_dists_2d(v: str) -> str:
 
 
 def _ss_enc_from_dists(dists: str) -> str:
-    """Text twin of :func:`_enc_from_dists`."""
+    """array of M argmin encodings d·K + c from the 2-D distance array
+    (two-arg transform lambda supplies the code index)."""
     return (
         f"transform({dists}, dj -> array_min("
         f"transform(dj, (d, i) -> d * {K_PQ} + CAST(i AS BIGINT))))"
@@ -166,7 +121,10 @@ def ss_d2(emb: str) -> str:
 
 
 def ss_pq_code_array(emb: str) -> str:
-    """Text twin of :func:`pq_code_array`."""
+    """array<int> of the M per-subspace PQ codes for one embedding —
+    the map-only encoding kernel, kept as one compact column for
+    symmetric (all-pairs) consumers like the knn_label_noise
+    prefilter."""
     return (
         f"element_at(transform(array({ss_to_double(emb)}), "
         f"v -> transform({_ss_enc_from_dists(_ss_dists_2d('v'))}, "
@@ -175,9 +133,13 @@ def ss_pq_code_array(emb: str) -> str:
 
 
 def ss_pq_pack(emb: str) -> str:
-    """Text twin of :func:`pq_pack` (same double lambda binding; the
-    named_struct resolves to the same CreateNamedStruct as
-    F.struct(...alias...))."""
+    """struct(packed_code, recon_err_e6): the 32-bit packed code and the
+    total squared reconstruction error in micros.
+
+    Double lambda binding: the widened vector feeds M×K folds once, and
+    the 8-element enc array feeds the 16 pack/err references once.
+    enc % K is the code; enc >> 4 recovers micros(dist) exactly (enc is
+    nonnegative and K is a power of two)."""
     enc_arr = (
         f"element_at(transform(array({ss_to_double(emb)}), "
         f"v -> {_ss_enc_from_dists(_ss_dists_2d('v'))}), 1)"
@@ -196,8 +158,11 @@ def ss_pq_pack(emb: str) -> str:
 
 
 def ss_recon_dot(codes_a: str, codes_b: str) -> str:
-    """Text twin of :func:`recon_dot` (same left-associated addition of
-    table lookups)."""
+    """Reconstructed dot product of two PQ-coded vectors:
+    Σ_j DOT_TABS[j][code_a[j]·K + code_b[j]]. Left-associated addition
+    of table literals — bit-exact cross-engine because both engines
+    only LOOK UP doubles that were computed once in Python (the SQL
+    twin parses the same shortest-repr decimal strings)."""
     terms = " + ".join(
         f"element_at({ss_arr(DOT_TABS[j])}, "
         f"element_at({codes_a}, {j + 1}) * {K_PQ} "
@@ -227,59 +192,8 @@ def _sql_enc_j(emb: str, j: int) -> str:
     return f"list_min([{parts}])"
 
 
-def pq_pack(emb: Column | str) -> Column:
-    """struct(packed_code, recon_err_e6): the 32-bit packed code and the
-    total squared reconstruction error in micros.
-
-    Double lambda binding: the widened vector feeds M×K folds once, and
-    the 8-element enc array feeds the 16 pack/err references once.
-    enc % K is the code; enc >> 4 recovers micros(dist) exactly (enc is
-    nonnegative and K is a power of two). A string input (column name)
-    takes the one-parse F.expr path.
-    """
-    if isinstance(emb, str):
-        return F.expr(ss_pq_pack(emb))
-
-    def pack(e: Column) -> Column:
-        packed = F.lit(0).cast("long")
-        err = F.lit(0).cast("long")
-        for j in range(M_SUB):
-            enc = F.element_at(e, j + 1)
-            packed = packed + (enc % K_PQ) * F.lit(K_PQ**j)
-            err = err + F.shiftright(enc, 4)
-        return F.struct(packed.alias("packed_code"), err.alias("recon_err_e6"))
-
-    enc_arr = F.element_at(
-        F.transform(
-            F.array(to_double(emb)),
-            lambda v: _enc_from_dists(_dists_2d(v)),
-        ),
-        1,
-    )
-    return F.element_at(F.transform(F.array(enc_arr), pack), 1)
-
-
-def pq_code_array(emb: Column | str) -> Column:
-    """array<int> of the M per-subspace PQ codes for one embedding —
-    the map-only encoding kernel, kept as one compact column for
-    symmetric (all-pairs) consumers like the knn_label_noise
-    prefilter. A string input takes the one-parse F.expr path."""
-    if isinstance(emb, str):
-        return F.expr(ss_pq_code_array(emb))
-    return F.element_at(
-        F.transform(
-            F.array(to_double(emb)),
-            lambda v: F.transform(
-                _enc_from_dists(_dists_2d(v)),
-                lambda e: (e % K_PQ).cast("int"),
-            ),
-        ),
-        1,
-    )
-
-
 def sql_pq_code_array(emb: str) -> str:
-    """DuckDB twin of :func:`pq_code_array`."""
+    """DuckDB twin of :func:`ss_pq_code_array`."""
     return (
         f"list_transform({_sql_enc_array(emb)}, "
         f"e_ -> CAST(e_ % {K_PQ} AS INT))"
@@ -292,7 +206,7 @@ def pq_codes_exploded(emb_df: DataFrame) -> DataFrame:
     embedding)."""
     return emb_df.select(
         "vec_id",
-        F.posexplode(pq_code_array("embedding")).alias("j", "code"),
+        F.posexplode(F.expr(ss_pq_code_array("embedding"))).alias("j", "code"),
     )
 
 
@@ -313,30 +227,8 @@ DOT_TABS: tuple[tuple[float, ...], ...] = tuple(
 )
 
 
-def recon_dot(codes_a: Column | str, codes_b: Column | str) -> Column:
-    """Reconstructed dot product of two PQ-coded vectors:
-    Σ_j DOT_TABS[j][code_a[j]·K + code_b[j]]. Left-associated addition
-    of table literals — bit-exact cross-engine because both engines
-    only LOOK UP doubles that were computed once in Python (the SQL
-    twin parses the same shortest-repr decimal strings). String inputs
-    (column names) take the one-parse F.expr path."""
-    if isinstance(codes_a, str) and isinstance(codes_b, str):
-        return F.expr(ss_recon_dot(codes_a, codes_b))
-    out: Column | None = None
-    for j in range(M_SUB):
-        idx = (
-            F.element_at(codes_a, j + 1) * F.lit(K_PQ)
-            + F.element_at(codes_b, j + 1)
-            + F.lit(1)
-        )
-        term = F.element_at(F.lit(list(DOT_TABS[j])), idx)
-        out = term if out is None else out + term
-    assert out is not None
-    return out
-
-
 def sql_recon_dot(codes_a: str, codes_b: str) -> str:
-    """DuckDB twin of :func:`recon_dot` (same association order)."""
+    """DuckDB twin of :func:`ss_recon_dot` (same association order)."""
     terms = " + ".join(
         f"([{', '.join(repr(x) for x in DOT_TABS[j])}])"
         f"[{codes_a}[{j + 1}] * {K_PQ} + {codes_b}[{j + 1}] + 1]"
@@ -370,7 +262,7 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # two-step select: CollapseProject keeps the (expensive, twice-
     # referenced) pack struct in its own project instead of inlining it
-    return emb.select("vec_id", pq_pack("embedding").alias("s")).select(
+    return emb.select("vec_id", F.expr(ss_pq_pack("embedding")).alias("s")).select(
         "vec_id", "s.packed_code", "s.recon_err_e6"
     )
 
@@ -501,7 +393,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            micros(l2sq("q_emb", "embedding")).alias("l2_e6"),
+            F.expr(ss_micros(ss_l2sq("q_emb", "embedding"))).alias("l2_e6"),
         )
     )
     w = W.partitionBy("q_id").orderBy(F.asc("l2_e6"), F.asc("neighbor_id"))
@@ -530,7 +422,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 from algorithmproject_spark_spark.operators.annivf import (  # noqa: E402
     cells as _ivf_cells,
-    probe_cells_col as _ivf_probe_cells_col,
+    ss_probe_cells as _ivf_ss_probe_cells,
     sql_cell as _sql_ivf_cell,
     sql_probe_cells as _sql_ivf_probe_cells,
 )
@@ -582,7 +474,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _ivf_cells(spark, sf_dir).select("vec_id", "cell")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
-        F.explode(_ivf_probe_cells_col("embedding")).alias("cell"),
+        F.explode(F.expr(_ivf_ss_probe_cells("embedding"))).alias("cell"),
     )
     cand = (
         b.join(F.broadcast(q), "cell")

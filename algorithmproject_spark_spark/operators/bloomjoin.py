@@ -75,7 +75,7 @@ def ss_positions(key_expr: str, m_bits: int, k: int) -> list[str]:
     with the fixed MinHash constants over the overflow-reduced key
     ((key % HASH_REDUCE) * a + b stays < 2^62).
 
-    Contract (same as numeric.hash_mod): keys must be NON-NEGATIVE —
+    Contract (same as numeric.ss_hash_mod): keys must be NON-NEGATIVE —
     both engines' % follows the dividend's sign, so a negative key
     would yield a negative bit position. Map signed keys through
     pmod/abs before filtering."""

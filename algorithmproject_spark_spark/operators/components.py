@@ -76,10 +76,12 @@ def connected_components_min_label(
         pushed = edges.join(labels.withColumnRenamed("v", "s"), "s").selectExpr(
             "d AS v", "lbl"
         )
-        # LAZY checkpoint (r12): the loop has no per-round action, so
-        # deferring materialization collapses k eager jobs into the
-        # consumer's one final DAG; plan truncation (the reason to
-        # checkpoint at all) is identical either way.
+        # LAZY checkpoint (r12): plan truncation (the reason to
+        # checkpoint at all) is identical to an eager one. It does NOT
+        # defer the rounds under AQE (the session default): each
+        # round's shuffle stages run at build time — dedup_cluster_reps
+        # builds with 23 Spark jobs at sf0.1 (3 with AQE off), counted
+        # from the status store; see tracked_local_checkpoint.
         labels = (
             pushed.unionAll(labels)
             .groupBy("v")

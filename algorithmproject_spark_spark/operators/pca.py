@@ -44,10 +44,10 @@ spectral member a 100 TB curation pipeline needs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.vectors import EMB_DIM, to_double
+from algorithmproject_spark_spark.functions.vectors import EMB_DIM, ss_to_double
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -69,20 +69,8 @@ def _tdiv(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
-def quant_col(emb: Column) -> Column:
-    """array<long> of milli-quantized components."""
-    return F.transform(
-        to_double(emb),
-        lambda x: F.floor(x * F.lit(float(Q_SCALE)) + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
-
-
 def ss_quant(emb: str) -> str:
-    """Spark-SQL text twin of :func:`quant_col` (r13 one-parse)."""
-    from algorithmproject_spark_spark.functions.vectors import ss_to_double
-
+    """array<long> of milli-quantized components."""
     return (
         f"transform({ss_to_double(emb)}, "
         f"x -> CAST(floor(x * {float(Q_SCALE)!r}D + 0.5D) AS BIGINT))"

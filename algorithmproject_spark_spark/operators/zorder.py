@@ -97,12 +97,10 @@ def sql_zvalue16(a_expr: str, b_expr: str) -> str:
 
 # ONE exact-div implementation repo-wide: a local (num - num%den)/den
 # copy would silently go inexact past 2^53 (double `/` + cast).
-from algorithmproject_spark_spark.functions.numeric import (  # noqa: E402
-    floordiv as _floordiv,
-)
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv  # noqa: E402
 
 
-def rank16_exact(col: Column, vmin: Column, vmax: Column) -> Column:
+def ss_rank16(expr: str, vmin: str, vmax: str) -> str:
     """Scale a BIGINT dimension to 0..65535 with exact integer math:
     ``(x - min) * 65535 div (max - min)`` (the degenerate max==min
     case maps everything to 0).
@@ -110,9 +108,10 @@ def rank16_exact(col: Column, vmin: Column, vmax: Column) -> Column:
     Overflow contract: ``(max - min) * 65535`` must stay below 2^63 —
     i.e. the dimension's RANGE below ~1.4e14. Timestamps therefore
     enter as epoch SECONDS (range ~3e7/year), never micros."""
-    rng = vmax - vmin
-    return F.when(rng <= F.lit(0), F.lit(0).cast("long")).otherwise(
-        _floordiv((col - vmin) * F.lit(65535), rng)
+    rng = f"(({vmax}) - ({vmin}))"
+    return (
+        f"CASE WHEN {rng} <= 0 THEN CAST(0 AS BIGINT) "
+        f"ELSE {ss_floordiv(f'(({expr}) - ({vmin})) * 65535', rng)} END"
     )
 
 
@@ -141,8 +140,8 @@ def write_zordered(
         F.min(b_col).alias("b_min"), F.max(b_col).alias("b_max"),
     )
     z = zvalue16(
-        rank16_exact(F.col(a_col), F.col("a_min"), F.col("a_max")),
-        rank16_exact(F.col(b_col), F.col("b_min"), F.col("b_max")),
+        F.expr(ss_rank16(a_col, "a_min", "a_max")),
+        F.expr(ss_rank16(b_col, "b_min", "b_max")),
     )
     (
         df.crossJoin(F.broadcast(mm))

@@ -38,7 +38,7 @@ from algorithmproject_spark_spark.functions.htmlops import (
     sql_tag_entity_words,
     tag_entity_words,
 )
-from algorithmproject_spark_spark.functions.numeric import hash_mod, sql_hash_mod
+from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
 from algorithmproject_spark_spark.operators.core import dedup_exact
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.queries.dedup import (
@@ -256,8 +256,10 @@ def corpus_pagerank(
                 "word",
                 f"CAST({base} + c * 17 DIV 20 AS BIGINT) AS rank",
             )
-            # LAZY checkpoint (r12): no per-iteration action in the
-            # fixed-count loop -> one final DAG instead of k eager jobs
+            # LAZY checkpoint (r12): truncates the plan like an eager
+            # one; under AQE (the session default) each iteration's
+            # stages still run at build time — 20 build jobs at sf0.1
+            # (3 with AQE off), see tracked_local_checkpoint
             .transform(tracked_lazy_local_checkpoint)
         )
     return ranks
@@ -509,7 +511,7 @@ def article_tagging_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     survivors = tagged.filter(
-        hash_mod("doc_id", _EXT_DUP_MOD) != F.lit(_EXT_DUP_SLOT)
+        F.expr(ss_hash_mod("doc_id", _EXT_DUP_MOD)) != F.lit(_EXT_DUP_SLOT)
     )
     w = W.partitionBy("lang").orderBy("doc_id")
     quota = survivors.select(
@@ -574,7 +576,7 @@ def pretrain_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = clean.join(spans, "doc_id").filter(
         F.col("dup_permille") < PRETRAIN_MAX_DUP_PERMILLE
     )
-    bucket = hash_mod("doc_id", SPLIT_MOD)
+    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
     split = (
         F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
         .when(bucket < SPLIT_VAL_LT, F.lit("val"))

@@ -19,7 +19,7 @@ from algorithmproject_spark_spark.functions.htmlops import (
     sql_tag_entity_words,
     tag_entity_words,
 )
-from algorithmproject_spark_spark.functions.numeric import scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -96,7 +96,7 @@ def rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(scaled_long("l_quantity", 1)).alias("sum_qty"),
+        F.expr(f"sum({ss_scaled_long('l_quantity', 1)})").alias("sum_qty"),
     )
 
 
@@ -264,7 +264,7 @@ def orders_argmax_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderkey",
-        scaled_long("o_totalprice").alias("cents"),
+        F.expr(ss_scaled_long("o_totalprice")).alias("cents"),
     )
     # assert_true returns NULL on success — route it through coalesce
     # so the (always-0) guard term joins the composite without NULLing

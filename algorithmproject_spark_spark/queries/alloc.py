@@ -31,10 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    scaled_long,
-)
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -79,9 +76,12 @@ def corpus_quota_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = counts.select(
         "lang",
         "n_docs",
-        floordiv(
-            F.lit(ALLOC_BUDGET) * F.col("n_docs"),
-            F.sum("n_docs").over(wall),
+        F.expr(
+            ss_floordiv(
+                f"{ALLOC_BUDGET} * n_docs",
+                "sum(n_docs) OVER (ROWS BETWEEN UNBOUNDED PRECEDING"
+                " AND UNBOUNDED FOLLOWING)",
+            )
         ).alias("base"),
         (
             (F.lit(ALLOC_BUDGET) * F.col("n_docs"))
@@ -166,7 +166,7 @@ def corpus_quota_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type", scaled_long("value", 100).alias("v")
+        "event_type", F.expr(ss_scaled_long("value", 100)).alias("v")
     )
     dist = ev.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c"))
     wt = W.partitionBy("event_type")

@@ -31,8 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.hashing import (
-    char_fold_hash,
     sql_char_fold_hash,
+    ss_char_fold_hash,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -63,9 +63,7 @@ def sliding_chunks(
         "doc_id",
         "chunk_idx",
         F.size("chunk").cast("long").alias("n_chunk_tokens"),
-        char_fold_hash(F.array_join(F.col("chunk"), " ")).alias(
-            "chunk_hash"
-        ),
+        F.expr(ss_char_fold_hash("array_join(chunk, ' ')")).alias("chunk_hash"),
     )
 
 

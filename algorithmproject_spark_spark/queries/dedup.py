@@ -31,6 +31,7 @@ from algorithmproject_spark_spark.functions.hashing import (
 )
 from algorithmproject_spark_spark.functions.numeric import (
     sql_hash_mod,
+    ss_hash_mod,
     ss_micros,
 )
 from algorithmproject_spark_spark.registry import register
@@ -75,8 +76,8 @@ def _shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = _token_hashes(spark, sf_dir)
     # one-parse text twin (r12); `th` is a bare column reference so the
     # textual repetition inside the gram composition is O(1) reads, not
-    # upstream fold re-evaluation (the bind_once concern of the Column
-    # form does not apply to a materialized column)
+    # upstream fold re-evaluation (the ss_bind concern does not apply
+    # to a materialized column)
     sh = tok.select(
         "doc_id",
         F.expr(
@@ -876,7 +877,7 @@ INCR_NEW_FROM = 8  # hash_mod(doc_id, 10) >= 8 → the "new batch" (~20%)
     "size at equal bucket occupancy",
 )
 def incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.functions.numeric import hash_mod
+    from algorithmproject_spark_spark.functions.numeric import ss_hash_mod
 
     sig = minhash_signatures(spark, sf_dir)
     sh = _shingle_hashes(spark, sf_dir)
@@ -893,7 +894,7 @@ def incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sig.select(
         "doc_id", F.posexplode(band_keys).alias("band_idx", "band_key")
     )
-    is_new = hash_mod("doc_id", INCR_SPLIT_MOD) >= INCR_NEW_FROM
+    is_new = F.expr(ss_hash_mod("doc_id", INCR_SPLIT_MOD)) >= INCR_NEW_FROM
     new_bands = bands.filter(is_new).select(
         F.col("doc_id").alias("new_id"), "band_idx", "band_key"
     )
@@ -1276,7 +1277,6 @@ _QD_REP = (
 )
 def quality_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from algorithmproject_spark_spark.functions.numeric import micros, ppm
 
     from algorithmproject_spark_spark.functions.numeric import ss_ppm
 
@@ -1375,9 +1375,7 @@ def neardup_flavor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", F.lit(1).alias("in_sh")
     )
     j = mh.join(sh_p, ["doc_a", "doc_b"], "full_outer")
-    both = F.sum(
-        (F.col("in_mh").isNotNull() & F.col("in_sh").isNotNull()).cast("long")
-    )
+    both = "sum(CAST(in_mh IS NOT NULL AND in_sh IS NOT NULL AS BIGINT))"
     only_mh = F.sum(
         (F.col("in_mh").isNotNull() & F.col("in_sh").isNull()).cast("long")
     )
@@ -1385,14 +1383,14 @@ def neardup_flavor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("in_mh").isNull() & F.col("in_sh").isNotNull()).cast("long")
     )
     n_union = F.count(F.lit(1))
-    from algorithmproject_spark_spark.functions.numeric import ppm as _ppm
+    from algorithmproject_spark_spark.functions.numeric import ss_ppm
 
     return j.agg(
-        both.alias("n_both"),
+        F.expr(both).alias("n_both"),
         only_mh.alias("n_minhash_only"),
         only_sh.alias("n_simhash_only"),
         n_union.cast("long").alias("n_union"),
-        F.when(n_union > 0, _ppm(both, n_union))
+        F.when(n_union > 0, F.expr(ss_ppm(both, "count(1)")))
         .otherwise(F.lit(None).cast("long"))
         .alias("agreement_ppm"),
     )

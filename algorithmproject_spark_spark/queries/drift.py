@@ -30,10 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    hash_mod,
-    ppm,
     sql_hash_mod,
     sql_ppm,
+    ss_floordiv,
+    ss_hash_mod,
+    ss_ppm,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -51,7 +52,7 @@ def token_drift(docs: DataFrame, top_n: int = TOP_N) -> DataFrame:
     denominator 0, which raises loudly under ANSI mode in both engines
     rather than fabricating a drift of 0."""
     toks = docs.select(
-        hash_mod("doc_id", 2).alias("side"),
+        F.expr(ss_hash_mod("doc_id", 2)).alias("side"),
         F.explode(F.split(F.col("text"), " ")).alias("tok"),
     )
     counts = toks.groupBy("tok").agg(
@@ -67,8 +68,8 @@ def token_drift(docs: DataFrame, top_n: int = TOP_N) -> DataFrame:
             "tok",
             "c_a",
             "c_b",
-            ppm(F.col("c_a"), F.col("n_a")).alias("ppm_a"),
-            ppm(F.col("c_b"), F.col("n_b")).alias("ppm_b"),
+            F.expr(ss_ppm("c_a", "n_a")).alias("ppm_a"),
+            F.expr(ss_ppm("c_b", "n_b")).alias("ppm_b"),
         )
         .withColumn(
             "drift_ppm", F.abs(F.col("ppm_a") - F.col("ppm_b"))
@@ -160,7 +161,7 @@ def _register_daily() -> None:
         "count + a self-join on the tiny (day, type) relation",
     )
     def events_daily_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from algorithmproject_spark_spark.functions.numeric import floordiv
+        from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_ppm
 
         ev = load_table(spark, sf_dir, "events")
         c = ev.groupBy(
@@ -168,7 +169,7 @@ def _register_daily() -> None:
         ).agg(F.count(F.lit(1)).alias("c"))
         n = c.groupBy("day").agg(F.sum("c").alias("n"))
         p = c.join(n, "day").select(
-            "day", "event_type", ppm(F.col("c"), F.col("n")).alias("p")
+            "day", "event_type", F.expr(ss_ppm("c", "n")).alias("p")
         )
         prev = p.select(
             F.date_add("day", 1).alias("day"),
@@ -192,7 +193,7 @@ def _register_daily() -> None:
             joined.join(today_days, "day", "left_semi")
             .join(prev_days, "day", "left_semi")
             .groupBy("day")
-            .agg(floordiv(F.sum("d"), F.lit(2)).alias("tv_ppm"))
+            .agg(F.expr(ss_floordiv("sum(d)", "2")).alias("tv_ppm"))
         )
 
 

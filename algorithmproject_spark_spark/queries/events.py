@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -35,7 +35,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.select(
             F.get_json_object("props", "$.k").cast("int").alias("k"),
-            scaled_long("value", 100).alias("value_cents_row"),
+            F.expr(ss_scaled_long("value", 100)).alias("value_cents_row"),
         )
         .groupBy("k")
         .agg(
@@ -63,7 +63,7 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value", 100)).alias("value_cents"),
+            F.expr(f"sum({ss_scaled_long('value', 100)})").alias("value_cents"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -202,7 +202,7 @@ def events_sliding_2h_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value", 100)).alias("value_cents"),
+            F.expr(f"sum({ss_scaled_long('value', 100)})").alias("value_cents"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -361,12 +361,12 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from algorithmproject_spark_spark.functions.numeric import scaled_long
+    from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 
     ev = load_table(spark, sf_dir, "events")
     agg = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.sum(scaled_long("value", 1000000)).alias("val_e6"))
+    ).agg(F.expr(f"sum({ss_scaled_long('value', 1000000)})").alias("val_e6"))
     bounds = agg.groupBy("event_type").agg(
         F.min("hour").alias("lo"), F.max("hour").alias("hi")
     )
@@ -544,7 +544,7 @@ def winsorized_value_stats(events: DataFrame, pct: int = WINSOR_PCT) -> DataFram
     from pyspark.sql import Window as W
 
     ev = events.select(
-        "event_type", scaled_long("value").alias("v_e2"), "event_id"
+        "event_type", F.expr(ss_scaled_long("value")).alias("v_e2"), "event_id"
     )
     wo = W.partitionBy("event_type").orderBy("v_e2", "event_id")
     wp = W.partitionBy("event_type")
@@ -610,7 +610,7 @@ def events_exact_global_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql import Window as W
 
     ev = load_table(spark, sf_dir, "events").select(
-        scaled_long("value").alias("v_e2")
+        F.expr(ss_scaled_long("value")).alias("v_e2")
     )
     dist = ev.groupBy("v_e2").agg(F.count(F.lit(1)).alias("c"))
     cum = dist.select(
@@ -680,7 +680,7 @@ def events_pivot_daily_type_counts(
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("d"),
         "event_type",
-        scaled_long("value", 100).alias("cents"),
+        F.expr(ss_scaled_long("value", 100)).alias("cents"),
     )
     wide = (
         ev.groupBy("d")
@@ -737,23 +737,20 @@ def events_pivot_daily_type_counts(
     "exact cents x whole-second integer arithmetic",
 )
 def events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    from algorithmproject_spark_spark.functions.numeric import floordiv
-
     ev = load_table(spark, sf_dir, "events")
-    t = F.unix_micros("ts")
-    w = W.partitionBy("user_id", "event_type").orderBy(t, "event_id")
+    t = "unix_micros(ts)"
+    w = f"PARTITION BY user_id, event_type ORDER BY {t}, event_id"
     series = ev.select(
         "event_type",
-        scaled_long("value", 100).alias("cents"),
-        floordiv(F.lead(t).over(w) - t, F.lit(1_000_000)).alias("dt_s"),
+        F.expr(ss_scaled_long("value", 100)).alias("cents"),
+        F.expr(ss_floordiv(f"lead({t}) OVER ({w}) - {t}", "1000000")).alias(
+            "dt_s"
+        ),
     ).filter(F.col("dt_s").isNotNull())
     return series.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_intervals"),
         F.sum("dt_s").alias("total_s"),
-        floordiv(
-            F.sum(F.col("cents") * F.col("dt_s")),
-            F.nullif(F.sum("dt_s"), F.lit(0)),
+        F.expr(
+            ss_floordiv("sum(cents * dt_s)", "nullif(sum(dt_s), 0)")
         ).alias("twa_cents"),
     )

@@ -30,12 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    ppm,
-    sql_ppm,
-    ss_ppm,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_ppm, ss_ppm
 from algorithmproject_spark_spark.queries.dedup import (
     jaccard_pairs_above,
     sql_dup_pairs_cte,

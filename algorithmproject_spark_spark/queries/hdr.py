@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import floordiv, micros
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_micros
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -72,17 +72,15 @@ def sql_hdr_bucket(v: str) -> str:
     )
 
 
-def hdr_rep(idx):
+def ss_hdr_rep(idx: str) -> str:
     """Upper-bound representative value of bucket ``idx`` (the
     estimate the sketch reports): exact for the sub-{SUB} buckets,
     ((SUB + sub + 1) << octave) - 1 above."""
-    o = floordiv(idx - F.lit(SUB), F.lit(SUB))
-    sub = (idx - F.lit(SUB)) % SUB
-    return F.when(idx < SUB, idx).otherwise(
-        F.call_function(
-            "shiftleft", sub + F.lit(SUB + 1), o.cast("int")
-        )
-        - F.lit(1)
+    octave = ss_floordiv(f"{idx} - {SUB}", str(SUB))
+    return (
+        f"CASE WHEN {idx} < {SUB} THEN {idx} "
+        f"ELSE shiftleft(({idx} - {SUB}) % {SUB} + {SUB + 1}, "
+        f"CAST({octave} AS INT)) - 1 END"
     )
 
 
@@ -177,7 +175,7 @@ def events_hdr_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so a negative value must fail the JOB loudly in BOTH engines, not
     # silently split them (ADVICE r8). assert_true returns NULL on
     # success; coalesce folds the always-0 guard into v.
-    raw_v = micros(F.col("value"))
+    raw_v = F.expr(ss_micros("value"))
     guard = F.coalesce(
         F.assert_true(
             raw_v >= 0,
@@ -218,7 +216,7 @@ def events_hdr_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(
                 F.when(
                     F.col("cum") * 100 >= F.col("n") * p,
-                    hdr_rep(F.col("idx")),
+                    F.expr(ss_hdr_rep("idx")),
                 )
             )
             .cast("long")

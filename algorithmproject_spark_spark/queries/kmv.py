@@ -31,10 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import (
-    hash_mod,
-    sql_hash_mod,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_hash_mod, ss_hash_mod
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -49,7 +46,7 @@ def kmv_distinct_per_group(
     ``(group, n_exact, kmv_size, kth_min, est_distinct)``. When the
     group has < k distinct keys the sketch IS the exact set and the
     estimate falls back to its size."""
-    h = hash_mod(F.col(key_col).cast("long"), KMV_MOD)
+    h = F.expr(ss_hash_mod(f"CAST({key_col} AS BIGINT)", KMV_MOD))
     sk = df.select(
         F.col(group_col).alias("g"), h.alias("h"), key_col
     ).groupBy("g").agg(
@@ -175,7 +172,7 @@ def kmv_merge(sketches: DataFrame, k: int = KMV_K) -> DataFrame:
 )
 def events_kmv_merged_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    h = hash_mod(F.col("user_id").cast("long"), KMV_MOD)
+    h = F.expr(ss_hash_mod("CAST(user_id AS BIGINT)", KMV_MOD))
     per_type = (
         ev.select(F.col("event_type").alias("g"), h.alias("h"))
         .groupBy("g")
@@ -257,7 +254,7 @@ def _sql_est(mins: str, k: int = KMV_K) -> str:
 )
 def events_kmv_type_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    h = hash_mod(F.col("user_id").cast("long"), KMV_MOD)
+    h = F.expr(ss_hash_mod("CAST(user_id AS BIGINT)", KMV_MOD))
     sel = ev.filter(F.col("event_type").isin("view", "purchase")).select(
         "event_type", h.alias("h"), "user_id"
     )

@@ -23,7 +23,7 @@ Scale shape — SemDeDup grouping + PQ symmetric prefilter:
    exactly when cells exceed 256·cap vectors, as at sf1).
 2. Within a group, pairs are first scored by the PQ RECONSTRUCTED dot
    product — M_SUB literal-table lookups per pair (operators/annpq.py
-   ``recon_dot``) instead of a DIM-element fold — and only the top
+   ``ss_recon_dot``) instead of a DIM-element fold — and only the top
    ``PQ_PREFILTER_C`` (= 4·k) candidates per vector by that proxy get
    the exact cosine. The exact-cosine volume drops from ~cap per
    vector to 4·k per vector (~25× here), which is what made the sf1
@@ -45,30 +45,24 @@ from pyspark.sql.window import Window as W
 
 from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
-from algorithmproject_spark_spark.functions.numeric import (
-    micros,
-    sql_micros,
-    ss_micros,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
-    _dot_d,
-    _norm_d,
     sql_dot,
     sql_norm,
     sql_to_double,
     ss_dot,
-    to_double,
+    ss_norm,
+    ss_to_double,
 )
 from algorithmproject_spark_spark.operators.annivf import (
     K_CELLS,
-    cell_col,
+    ss_cell,
     sql_cell,
 )
 from algorithmproject_spark_spark.operators.annpq import (
-    pq_code_array,
-    recon_dot,
     sql_pq_code_array,
     sql_recon_dot,
+    ss_pq_code_array,
     ss_recon_dot,
 )
 from algorithmproject_spark_spark.queries.llmprep import (
@@ -155,10 +149,10 @@ def _prefiltered_exact_pairs(
     cn = emb.select(
         "vec_id",
         "label",
-        cell_col("embedding", n_cells).alias("cell"),
-        to_double("embedding").alias("we"),
-        pq_code_array("embedding").alias("codes"),
-    ).withColumn("nrm", _norm_d("we"))
+        F.expr(ss_cell("embedding", n_cells)).alias("cell"),
+        F.expr(ss_to_double("embedding")).alias("we"),
+        F.expr(ss_pq_code_array("embedding")).alias("codes"),
+    ).withColumn("nrm", F.expr(ss_norm("we")))
     # Pin the coded relation: Catalyst does not dedupe identical
     # self-join subtrees, so without this both pair-join sides re-run
     # the 128-fold PQ encode and the cell argmin over the full corpus.
@@ -170,7 +164,7 @@ def _prefiltered_exact_pairs(
     ).transform(tracked_local_checkpoint)
     # Stage 1 — proxy scoring: the pair join carries 8-int code arrays
     # and a scalar norm, never the 64-double widened vector, and scores
-    # each pair with M literal-table lookups (recon_dot)
+    # each pair with M literal-table lookups (ss_recon_dot)
     a = cs.selectExpr(
         "vec_id",
         "label",

@@ -29,11 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    hash_mod,
-    micros,
     sql_hash_mod,
     sql_micros,
+    ss_hash_mod,
+    ss_micros,
 )
 from algorithmproject_spark_spark.functions.text import ngrams, sql_ngrams, tokenize
 from algorithmproject_spark_spark.registry import register
@@ -134,14 +133,14 @@ def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top_bigram_n",
         F.when(
             F.col("n_bigrams") > 0,
-            micros(F.col("top_bigram_n").cast("double") / F.col("n_bigrams")),
+            F.expr(ss_micros("CAST(top_bigram_n AS DOUBLE) / n_bigrams")),
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("top_bigram_frac_e6"),
-        micros(
-            F.lit(1.0) - F.col("n_distinct").cast("double") / F.col("n_tokens")
+        F.expr(
+            ss_micros("1.0D - CAST(n_distinct AS DOUBLE) / n_tokens")
         ).alias("dup_token_frac_e6"),
-        micros(F.col("sum_len").cast("double") / F.col("n_tokens")).alias(
+        F.expr(ss_micros("CAST(sum_len AS DOUBLE) / n_tokens")).alias(
             "mean_word_len_e6"
         ),
     )
@@ -262,7 +261,7 @@ def embedding_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return base.select(
         "vec_id",
-        micros(F.col("m")).alias("max_abs_e6"),
+        F.expr(ss_micros("m")).alias("max_abs_e6"),
         n_sat.alias("n_saturated"),
         F.floor(sse * F.lit(1000000000.0) + F.lit(0.5)).cast("long").alias("sse_e9"),
     )
@@ -409,15 +408,15 @@ def doc_pii_masked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from algorithmproject_spark_spark.functions.vectors import (  # noqa: E402
-    _norm_d,
     sql_dot,
     sql_norm,
     sql_to_double,
-    to_double,
+    ss_norm,
+    ss_to_double,
 )
 from algorithmproject_spark_spark.operators.annivf import (  # noqa: E402
     K_CELLS,
-    cell_col,
+    ss_cell,
     sql_cell,
 )
 
@@ -572,7 +571,7 @@ _CODE_BITS = 8     # sub-code bits (dims 1..8) -> codes 0..255
 _CODE_SCALE = 1024  # residual quantization step = 1/1024 per dim
 
 
-def _residual_code(we, bits: int = _CODE_BITS):
+def _ss_residual_code(we: str, bits: int = _CODE_BITS) -> str:
     """Quantized-residual code of a double-array column: bit d is
     the parity of floor(we[d] * 1024). Unlike an axis-SIGN code, the
     parity of the fine-grained quantization varies even inside a tight
@@ -581,20 +580,6 @@ def _residual_code(we, bits: int = _CODE_BITS):
     Engine-portable: IEEE double multiply + floor + % are bit-identical
     in Spark and DuckDB (both % truncate toward zero; the +2)%2 fold
     maps negative parities into {0,1})."""
-    if isinstance(we, str):
-        return F.expr(_ss_residual_code(we, bits))
-    code = F.lit(0)
-    for d in range(bits):
-        q = F.floor(F.element_at(we, d + 1) * F.lit(_CODE_SCALE)).cast("long")
-        bit = ((q % 2) + 2) % 2
-        code = code + bit * F.lit(1 << d)
-    return code.cast("long")
-
-
-def _ss_residual_code(we: str, bits: int = _CODE_BITS) -> str:
-    """Spark-SQL text twin of :func:`_residual_code` (one F.expr parse
-    instead of ~10 py4j calls per bit; same ops, same values — see
-    functions/vectors.py ss_* rationale)."""
     terms = " + ".join(
         f"(((CAST(floor(element_at({we}, {d + 1}) * {_CODE_SCALE}.0D) "
         f"AS BIGINT) % 2) + 2) % 2) * {1 << d}"
@@ -651,7 +636,7 @@ def _semdedup_drop_ids(pdf):
     per dimension), so every pair's dot product performs the identical
     IEEE add/multiply sequence as ``F.aggregate(zip_with(...))`` /
     ``list_reduce`` — vectorized across PAIRS, ordered across DIMS.
-    The cosine micros conversion mirrors functions/numeric.micros
+    The cosine micros conversion mirrors functions/numeric.ss_micros
     exactly: floor(dot / (na*nb) * 1e6 + 0.5).
 
     Blocked rows bound peak memory at BLOCK x n even for the one group
@@ -738,10 +723,10 @@ def embedding_semantic_dedup(
     cn = (
         emb.select(
             "vec_id",
-            cell_col("embedding", k).alias("cell"),
-            to_double("embedding").alias("we"),
+            F.expr(ss_cell("embedding", k)).alias("cell"),
+            F.expr(ss_to_double("embedding")).alias("we"),
         )
-        .withColumn("nrm", _norm_d("we"))
+        .withColumn("nrm", F.expr(ss_norm("we")))
     )
     cn = tracked_cache(cn)  # encode+norm once: the group input and the output
     cs = semdedup_subcells(cn, cell_cap)
@@ -805,7 +790,7 @@ _ORD_MULT = 2246822519  # independent of hash_mod's multiplier
 )
 def corpus_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    shard = hash_mod("doc_id", _SHARDS)
+    shard = F.expr(ss_hash_mod("doc_id", _SHARDS))
     ordkey = ((F.col("doc_id") % F.lit(999983)) * F.lit(_ORD_MULT)) % F.lit(1000000007)
     w = W.partitionBy(shard).orderBy(ordkey, "doc_id")
     return docs.select(
@@ -902,7 +887,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lit(x) for kv in MIXTURE_QUOTAS.items() for x in kv]
     )
     w = W.partitionBy("source").orderBy(
-        hash_mod("doc_id", 1000003), F.col("doc_id")
+        F.expr(ss_hash_mod("doc_id", 1000003)), F.col("doc_id")
     )
     return (
         docs.select(
@@ -951,7 +936,7 @@ SPLIT_VAL_LT = 90    # [80,90) val, [90,100) test
 )
 def corpus_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = hash_mod("doc_id", SPLIT_MOD)
+    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
     split = (
         F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
         .when(bucket < SPLIT_VAL_LT, F.lit("val"))
@@ -994,7 +979,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    bucket = hash_mod("doc_id", SPLIT_MOD)
+    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
     split = (
         F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
         .when(bucket < SPLIT_VAL_LT, F.lit("val"))

@@ -21,16 +21,16 @@ Exactness discipline (the kappa/EWMA lessons):
   this module: ``score_ppm`` (the quality logit is a signed score),
   anything derived from it by subtraction (``ncf`` cumulative-false
   offsets, score deltas), and the band index. Divisions touching any
-  of those MUST stay on trunc-division helpers (``floordiv`` /
-  ``F.call_function("div", ..)`` / SQL ``//``), whose trunc-vs-floor
+  of those MUST stay on trunc-division helpers (``ss_floordiv`` /
+  Spark ``div`` / DuckDB ``//``), whose trunc-vs-floor
   agreement for negatives is verified in tests. Do NOT reach for
-  ``ppm()`` / ``sql_ppm`` on score-derived quantities — those helpers
+  ``ss_ppm`` / ``sql_ppm`` on score-derived quantities — those helpers
   carry a ``0 <= count <= total`` precondition and their 1000×1000
   split wraps differently for negative operands; the existing ppm
   call sites here divide pure COUNTS (always >= 0), which is why they
   are safe.
 - The one double op (final AUC ratio) is a SINGLE IEEE division of
-  exact integers + ``micros`` — bit-identical cross-engine. Overflow
+  exact integers + ``ss_micros`` — bit-identical cross-engine. Overflow
   contract: the exact pair count 2·P·N must fit BIGINT, i.e.
   n_docs < ~4.3e9; beyond that, rank-sum AUC needs sampling anyway.
 
@@ -55,12 +55,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.hashing import bind_once
-from algorithmproject_spark_spark.functions.numeric import floordiv, micros
-from algorithmproject_spark_spark.functions.text import (
-    stopword_array,
-    tokenize,
-)
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_micros
+from algorithmproject_spark_spark.functions.text import tokenize
 from algorithmproject_spark_spark.queries.qualitymodel import (
     _sql_quality_prefix,
     quality_logit_cols,
@@ -74,30 +70,13 @@ _LBL_SQL = REGISTRY["doc_quality_score"].oracle
 E6 = 1_000_000
 
 
-def _label_from_toks(toks: F.Column) -> F.Column:
-    """Heuristic ``keep`` (0/1 long) from an already-bound token array —
-    the EXACT rule of ``doc_quality_score`` (queries/text.py:129); the
-    oracle uses the registered SQL, so this inline copy is hash-policed
-    against the canonical definition. Takes the token array (typically
-    a ``bind_once`` lambda variable) so callers deriving several
-    quantities from one tokenization share the bound value."""
-    n_tokens = F.size(toks)
-    sw = F.size(F.filter(toks, lambda t: F.array_contains(stopword_array(), t)))
-    sw_ratio = micros(sw.cast("double") / n_tokens)
-    rep_ratio = micros(F.size(F.array_distinct(toks)).cast("double") / n_tokens)
-    keep = (
-        n_tokens.between(20, 200)
-        & (sw_ratio < 500_000)
-        & (rep_ratio > 300_000)
-    )
-    return F.when(keep, 1).otherwise(0).cast("long")
-
-
 def ss_label_from_toks(toks: str) -> str:
-    """Spark-SQL text twin of :func:`_label_from_toks` over a bound
-    token-array variable (one F.expr parse — functions/hashing.py ss_*
-    rationale; same ops, bit-identical)."""
-    from algorithmproject_spark_spark.functions.numeric import ss_micros
+    """Heuristic ``keep`` (0/1 long) from an already-bound token-array
+    variable — the EXACT rule of ``doc_quality_score``
+    (queries/text.py:129); the oracle uses the registered SQL, so this
+    inline copy is hash-policed against the canonical definition.
+    Taking a bound variable (see ``ss_bind``) lets callers deriving
+    several quantities from one tokenization share the bound value."""
     from algorithmproject_spark_spark.functions.text import (
         ss_stopword_array,
     )
@@ -119,7 +98,7 @@ def ss_label_from_toks(toks: str) -> str:
 
 
 def _label_col() -> F.Column:
-    """:func:`_label_from_toks` over ``text``, tokenized ONCE per row —
+    """:func:`ss_label_from_toks` over ``text``, tokenized ONCE per row —
     as ONE F.expr parse (r12): the Column-API build of the stopword
     literal + HOF chain cost ~0.5 s of driver time per reference."""
     from algorithmproject_spark_spark.functions.hashing import ss_bind
@@ -225,18 +204,16 @@ def quality_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AUC = [sum over scores s of pos_s*(neg_below_s + neg_s/2)] / (P*N);
     # kept integer by scaling the numerator 2x. The ONE double division
     # is of exact BIGINTs — deterministic cross-engine (micros contract)
-    num2 = F.sum(F.col("n_pos") * (2 * F.col("neg_below") + F.col("n_neg")))
+    num2 = "sum(n_pos * (neg_below * 2 + n_neg))"
+    auc = ss_micros(
+        f"CAST({num2} AS DOUBLE) / (2.0D * CAST(sum(n_pos) AS DOUBLE)"
+        " * CAST(sum(n_neg) AS DOUBLE))"
+    )
     return cum.agg(
         p.cast("long").alias("n_pos"),
         n.cast("long").alias("n_neg"),
         F.count(F.lit(1)).cast("long").alias("n_scores"),
-        F.when(
-            (p > 0) & (n > 0),
-            micros(
-                num2.cast("double")
-                / (F.lit(2.0) * p.cast("double") * n.cast("double"))
-            ),
-        )
+        F.when((p > 0) & (n > 0), F.expr(auc))
         .otherwise(F.lit(None).cast("long"))
         .alias("auc_e6"),
     )
@@ -291,11 +268,9 @@ def quality_model_pr_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("score_ppm").cast("long").alias("thr_ppm"),
         F.col("tp").cast("long").alias("tp"),
         F.col("fp").cast("long").alias("fp"),
-        floordiv(F.col("tp") * E6, F.col("tp") + F.col("fp")).alias(
-            "precision_e6"
-        ),
+        F.expr(ss_floordiv(f"tp * {E6}", "tp + fp")).alias("precision_e6"),
         F.when(
-            F.col("p_total") > 0, floordiv(F.col("tp") * E6, F.col("p_total"))
+            F.col("p_total") > 0, F.expr(ss_floordiv(f"tp * {E6}", "p_total"))
         )
         .otherwise(F.lit(None).cast("long"))
         .alias("recall_e6"),
@@ -370,9 +345,7 @@ def _conformal_thresholds(sl: DataFrame) -> DataFrame:
         .alias("n_cal"),
     )
     # k = ceil((n+1)*(1-alpha)) = ceil(9(n+1)/10), via (a + den-1) div den
-    k = floordiv(
-        F.lit(9) * (F.col("n_cal") + 1) + F.lit(9), F.lit(10)
-    )
+    k = F.expr(ss_floordiv("9 * (n_cal + 1) + 9", "10"))
     return rk.filter(F.col("rn") == F.least(k, F.col("n_cal"))).select(
         "lang",
         F.col("n_cal").cast("long").alias("n_cal"),
@@ -425,13 +398,16 @@ def quality_conformal_coverage(
     thr = _conformal_thresholds(sl).select("lang", "thr_score_ppm")
     j = sl.join(F.broadcast(thr), "lang")
     acc = F.col("score_ppm") >= F.col("thr_score_ppm")
-    kept_acc = F.sum(
-        F.when((F.col("label") == 1) & acc, 1).otherwise(0)
-    ).cast("long")
+    kept_acc = (
+        "CAST(sum(CASE WHEN label = 1 AND score_ppm >= thr_score_ppm"
+        " THEN 1 ELSE 0 END) AS BIGINT)"
+    )
     return j.groupBy("lang", "thr_score_ppm").agg(
         F.sum("label").cast("long").alias("n_kept"),
-        kept_acc.alias("n_kept_accepted"),
-        floordiv(kept_acc * E6, F.sum("label")).alias("coverage_ppm"),
+        F.expr(kept_acc).alias("n_kept_accepted"),
+        F.expr(ss_floordiv(f"{kept_acc} * {E6}", "sum(label)")).alias(
+            "coverage_ppm"
+        ),
         (F.count(F.lit(1)) - F.sum("label")).cast("long").alias("n_other"),
         F.sum(F.when((F.col("label") == 0) & acc, 1).otherwise(0))
         .cast("long")
@@ -443,23 +419,16 @@ GINI_TOPK = 50
 
 #: ppm gini impurity of a (x, y) split of n — floor-composed from ppm
 #: rates so every intermediate is bounded by 1e12 REGARDLESS of corpus
-#: size (the N-independence trick: rate first, then square)
+#: size (the N-independence trick: rate first, then square); the Spark
+#: form is :func:`_ss_gini`
 _SQL_GINI = (
     "1000000 - (({x} * 1000000 // {n}) * ({x} * 1000000 // {n})) // 1000000"
     " - (({y} * 1000000 // {n}) * ({y} * 1000000 // {n})) // 1000000"
 )
 
 
-def _gini_ppm(x: F.Column, y: F.Column, n: F.Column) -> F.Column:
-    px = floordiv(x * E6, n)
-    py = floordiv(y * E6, n)
-    return (
-        F.lit(E6) - floordiv(px * px, F.lit(E6)) - floordiv(py * py, F.lit(E6))
-    )
-
-
 def _ss_gini(x: str, y: str, n: str) -> str:
-    """Spark-SQL text twin of :func:`_gini_ppm` (r13 one-parse)."""
+    """ppm gini impurity of a (x, y) split of n (see ``_SQL_GINI``)."""
     px = f"(({x}) * {E6} div ({n}))"
     py = f"(({y}) * {E6} div ({n}))"
     return f"({E6} - ({px} * {px}) div {E6} - ({py} * {py}) div {E6})"
@@ -645,9 +614,10 @@ def quality_isotonic_calibration(
     seg = j.join(k, F.col("j.band") <= F.col("k.band")).select(
         F.col("j.band").alias("jb"),
         F.col("k.band").alias("kb"),
-        floordiv(
-            (F.col("k.cp") - (F.col("j.cp") - F.col("j.pos"))) * E6,
-            F.col("k.cn") - (F.col("j.cn") - F.col("j.n")),
+        F.expr(
+            ss_floordiv(
+                f"(k.cp - (j.cp - j.pos)) * {E6}", "k.cn - (j.cn - j.n)"
+            )
         ).alias("rate_e6"),
     )
     mm = (
@@ -663,7 +633,7 @@ def quality_isotonic_calibration(
         F.col("band").cast("long").alias("band"),
         F.col("n").alias("n_docs"),
         F.col("pos").alias("n_pos"),
-        floordiv(F.col("pos") * E6, F.col("n")).alias("raw_rate_e6"),
+        F.expr(ss_floordiv(f"pos * {E6}", "n")).alias("raw_rate_e6"),
         F.col("iso").cast("long").alias("iso_rate_e6"),
     )
 
@@ -723,9 +693,7 @@ def quality_model_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = cum.select(
         "tp",
         "p_total",
-        floordiv(F.col("tp") * E6, F.col("tp") + F.col("fp")).alias(
-            "precision_e6"
-        ),
+        F.expr(ss_floordiv(f"tp * {E6}", "tp + fp")).alias("precision_e6"),
         (F.col("tp") - F.coalesce(F.lag("tp").over(wl), F.lit(0))).alias(
             "d_tp"
         ),
@@ -735,7 +703,7 @@ def quality_model_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.cast("long").alias("n_pos"),
         F.when(
             p > 0,
-            floordiv(F.sum(F.col("d_tp") * F.col("precision_e6")), p),
+            F.expr(ss_floordiv("sum(d_tp * precision_e6)", "max(p_total)")),
         )
         .otherwise(F.lit(None).cast("long"))
         .alias("ap_e6"),

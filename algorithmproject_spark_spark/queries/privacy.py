@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import floordiv, ppm
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -87,9 +87,7 @@ def privacy_k_anonymity_report(
         .otherwise(0)
         .cast("long")
         .alias("below_k"),
-        floordiv(F.col("n_risky") * F.lit(1_000_000), F.col("n_all")).alias(
-            "risk_mass_ppm"
-        ),
+        F.expr(ss_floordiv("n_risky * 1000000", "n_all")).alias("risk_mass_ppm"),
     )
 
 
@@ -158,7 +156,5 @@ def privacy_l_diversity_report(
         .otherwise(0)
         .cast("long")
         .alias("below_l"),
-        floordiv(F.col("n_risky") * F.lit(1_000_000), F.col("n_all")).alias(
-            "risk_mass_ppm"
-        ),
+        F.expr(ss_floordiv("n_risky * 1000000", "n_all")).alias("risk_mass_ppm"),
     )

@@ -31,8 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
-from algorithmproject_spark_spark.functions.numeric import floordiv, micros
-from algorithmproject_spark_spark.functions.vectors import EMB_DIM, sql_to_double, to_double
+from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_micros
+from algorithmproject_spark_spark.functions.vectors import (
+    EMB_DIM,
+    sql_to_double,
+    ss_to_double,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -100,12 +104,14 @@ FRAC = 20
 def label_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cn = emb.select(
-        "vec_id", "label", to_double("embedding").alias("we")
+        "vec_id", "label", F.expr(ss_to_double("embedding")).alias("we")
     )
     x = cn.select(
         "vec_id",
         "label",
-        F.posexplode(F.transform("we", lambda v: micros(v))).alias("d0", "x"),
+        F.posexplode(F.expr(f"transform(we, v -> {ss_micros('v')})")).alias(
+            "d0", "x"
+        ),
     ).select("vec_id", "label", (F.col("d0") + 1).alias("d"), "x")
     cent = x.groupBy("label", "d").agg(
         F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
@@ -114,8 +120,7 @@ def label_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "d",
         (
-            floordiv(F.col("s") + F.lit(C_SHIFT) * F.col("n"), F.col("n"))
-            - F.lit(C_SHIFT)
+            F.expr(ss_floordiv(f"s + {C_SHIFT} * n", "n")) - F.lit(C_SHIFT)
         ).alias("m"),
         "n",
     )

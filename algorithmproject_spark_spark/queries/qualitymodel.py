@@ -28,7 +28,7 @@ Features, fastText-style:
 Scale shape: MAP-ONLY. The weight vector is an in-plan literal (a
 broadcast variable in spirit, a ``element_at(lit(...))`` lookup in
 form — the same pattern as the PQ codebooks); tokens are hashed once
-per row (``bind_once`` — referenced by both the unigram sum and the
+per row (``ss_bind`` — referenced by both the unigram sum and the
 bigram composition); no explode, no join, no shuffle of any kind. At
 100 TB this is a single pass over the corpus that scales embarrassingly
 with executors. The plan-lint shuffle class is the map-only 0.05
@@ -49,15 +49,15 @@ from algorithmproject_spark_spark.functions.hashing import (
     GRAM_MULT,
     MOD,
     MULT,
-    bind_once,
-    gram_hash_array,
     sql_char_fold_hash,
     sql_gram_hash_array,
-    token_hash_array,
 )
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import sql_micros
-from algorithmproject_spark_spark.functions.text import tokenize
+from algorithmproject_spark_spark.functions.numeric import (
+    sql_micros,
+    ss_floordiv,
+    ss_micros,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -78,27 +78,25 @@ QM_BIAS_PPM = 1_500
 QM_KEEP_PPM = 0
 
 
-def _w_lookup(bucket: Column) -> Column:
-    """Weight of a feature bucket — one literal-array lookup (the
-    in-plan form of a broadcast weight vector; PQ codebook pattern)."""
-    return F.element_at(F.lit(list(QM_W_PPM)), (bucket + F.lit(1)).cast("int"))
-
-
 def _sql_w_lit() -> str:
     return "[" + ", ".join(str(w) for w in QM_W_PPM) + "]"
 
 
-#: Spark-SQL text of the frozen weight vector (constant-folds to the
-#: same one Literal `_w_lookup`'s F.lit ships)
+#: Spark-SQL text of the frozen weight vector (constant-folds to one
+#: Literal: a feature bucket's weight is one literal-array lookup, the
+#: in-plan form of a broadcast weight vector; PQ codebook pattern)
 _SS_W_LIT = "array(" + ", ".join(str(w) for w in QM_W_PPM) + ")"
 
 
 def ss_quality_struct_from_th(th: str) -> str:
-    """Spark-SQL text twin of :func:`quality_struct_from_th` over an
-    already-bound token-hash array variable — one F.expr parse instead
-    of ~3·D py4j calls (see functions/hashing.py ss_* rationale). Same
-    fold order, same integer ops, same named fields; results are
-    bit-identical (oracle-gated on every consumer)."""
+    """:func:`quality_struct` from an ALREADY-BOUND token-hash array
+    variable — the fused-scan entry point (r12): a caller that has
+    ``th`` bound for other features (trainedhead's evaluation rows)
+    scores the frozen head from the same binding instead of re-hashing
+    the text. One F.expr parse instead of ~3·D py4j calls (see
+    functions/hashing.py). Mean-pool + bias use trunc division (Spark
+    ``div``), NOT float ``/`` — sums are signed and both engines must
+    truncate toward zero."""
     from algorithmproject_spark_spark.functions.hashing import (
         ss_bind,
         ss_gram_hash_array,
@@ -126,7 +124,7 @@ def ss_quality_struct_from_th(th: str) -> str:
 
 
 def ss_quality_struct(text: str) -> str:
-    """Full text twin of :func:`quality_struct` for a COLUMN NAME."""
+    """Text of :func:`quality_struct` for a text COLUMN NAME."""
     from algorithmproject_spark_spark.functions.hashing import (
         ss_bind,
         ss_token_hash_array,
@@ -139,7 +137,7 @@ def ss_quality_struct(text: str) -> str:
     )
 
 
-def quality_struct(text: Column | str) -> Column:
+def quality_struct(text: str) -> Column:
     """``struct(n_feats, sum_w_ppm, score_ppm, keep)`` for a text
     column, with every field derived INSIDE the bound lambda so one
     evaluation of the struct runs the hashed logit map exactly once.
@@ -151,62 +149,12 @@ def quality_struct(text: Column | str) -> Column:
     every field reference and re-runs the weight-lookup aggregates per
     column (r12 — scored_docs paid the map 4× per row that way).
 
-    A string input (column name) takes the one-parse F.expr path
-    (r12 — the Column build cost ~2 s of driver time per query)."""
-    if isinstance(text, str):
-        return F.expr(ss_quality_struct(text))
-    toks = tokenize(text)
-    return bind_once(token_hash_array(toks), quality_struct_from_th)
+    Built as one F.expr parse (r12 — the Column-API build cost ~2 s
+    of driver time per query)."""
+    return F.expr(ss_quality_struct(text))
 
 
-def quality_struct_from_th(th: Column) -> Column:
-    """:func:`quality_struct` from an ALREADY-BOUND token-hash array —
-    the fused-scan entry point (r12): a caller that has ``th`` bound
-    for other features (trainedhead's evaluation rows) scores the
-    frozen head from the same binding instead of re-hashing the text.
-    Identical expression tree to the bound body quality_struct always
-    built."""
-
-    def score(th: Column) -> Column:
-        uni = F.aggregate(
-            F.transform(th, lambda h: _w_lookup(h % F.lit(QM_DIM))),
-            F.lit(0).cast("long"),
-            lambda acc, w: acc + w,
-        )
-        bi = F.aggregate(
-            F.transform(
-                gram_hash_array(th, 2), lambda h: _w_lookup(h % F.lit(QM_DIM))
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, w: acc + w,
-        )
-        n_feats = (
-            F.size(th) + F.greatest(F.size(th) - F.lit(1), F.lit(0))
-        ).cast("long")
-
-        def with_sum(sum_w: Column) -> Column:
-            # mean-pool + bias: trunc division (Spark `div`), NOT float
-            # `/` — sums are signed and both engines must truncate
-            # toward zero
-            score_ppm = (
-                F.call_function("div", sum_w, n_feats) + F.lit(QM_BIAS_PPM)
-            )
-            return F.struct(
-                n_feats.alias("n_feats"),
-                sum_w.alias("sum_w_ppm"),
-                score_ppm.alias("score_ppm"),
-                F.when(score_ppm >= QM_KEEP_PPM, F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("keep"),
-            )
-
-        return bind_once(uni + bi, with_sum)
-
-    return score(th)
-
-
-def quality_logit_cols(text: Column | str) -> list[Column]:
+def quality_logit_cols(text: str) -> list[Column]:
     """(n_feats, sum_w_ppm, score_ppm, keep) columns for a text column —
     shared by the batch query and the streaming twin. Each returned
     column carries its own copy of the scoring subtree: fine for
@@ -624,27 +572,20 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 WILSON_Z = "1.96"  # 95% two-sided
 
 
-def _wilson_bounds(k, n):
-    """(lower, upper) Wilson bounds as Column expressions — k, n are
-    BIGINT Columns; float ops sequenced exactly like _sql_wilson."""
-    z = F.lit(float(WILSON_Z))
-    nn = n.cast("double")
-    p = k.cast("double") / nn
-    z2 = z * z
-    denom = F.lit(1.0) + z2 / nn
-    center = p + z2 / (F.lit(2.0) * nn)
-    half = z * F.sqrt((p * (F.lit(1.0) - p) + z2 / (F.lit(4.0) * nn)) / nn)
-    return (center - half) / denom, (center + half) / denom
-
-
-def _sql_wilson(k: str, n: str) -> tuple[str, str]:
-    z = WILSON_Z
+def _sql_wilson(k: str, n: str, d: str = "") -> tuple[str, str]:
+    """(lower, upper) Wilson bounds of k successes in n BIGINT trials.
+    ``d=""`` renders DuckDB text; ``d="D"`` renders Spark text, whose
+    unsuffixed decimals would parse as DECIMAL instead of DOUBLE."""
+    z = f"{WILSON_Z}{d}"
     nn = f"CAST({n} AS DOUBLE)"
     p = f"(CAST({k} AS DOUBLE) / {nn})"
     z2 = f"({z} * {z})"
-    denom = f"(1.0 + {z2} / {nn})"
-    center = f"({p} + {z2} / (2.0 * {nn}))"
-    half = f"({z} * sqrt(({p} * (1.0 - {p}) + {z2} / (4.0 * {nn})) / {nn}))"
+    denom = f"(1.0{d} + {z2} / {nn})"
+    center = f"({p} + {z2} / (2.0{d} * {nn}))"
+    half = (
+        f"({z} * sqrt(({p} * (1.0{d} - {p}) + {z2} / (4.0{d} * {nn}))"
+        f" / {nn}))"
+    )
     return (
         f"(({center} - {half}) / {denom})",
         f"(({center} + {half}) / {denom})",
@@ -680,19 +621,12 @@ def quality_keep_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("keep").cast("long").alias("n_keep"),
     )
-    from algorithmproject_spark_spark.functions.numeric import (
-        floordiv,
-        micros as _micros,
-    )
-
-    lo, hi = _wilson_bounds(F.col("n_keep"), F.col("n_docs"))
+    lo, hi = _sql_wilson("n_keep", "n_docs", d="D")
     return agg.select(
         "lang",
         "n_docs",
         "n_keep",
-        floordiv(F.col("n_keep") * F.lit(1_000_000), F.col("n_docs")).alias(
-            "keep_ppm"
-        ),
-        _micros(lo).alias("wilson_lo_ppm"),
-        _micros(hi).alias("wilson_hi_ppm"),
+        F.expr(ss_floordiv("n_keep * 1000000", "n_docs")).alias("keep_ppm"),
+        F.expr(ss_micros(lo)).alias("wilson_lo_ppm"),
+        F.expr(ss_micros(hi)).alias("wilson_hi_ppm"),
     )

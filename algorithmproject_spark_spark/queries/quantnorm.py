@@ -30,11 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
-from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    ppm,
-    sql_ppm,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_ppm, ss_floordiv, ss_ppm
 from algorithmproject_spark_spark.queries.qualitymodel import (
     _sql_quality_prefix,
 )
@@ -139,7 +135,7 @@ def source_score_quantile_norm(
         .over(wsrc.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
         .alias("n"),
     )
-    rank_ppm = ppm(F.col("cum"), F.col("n"))
+    rank_ppm = ss_ppm("cum", "n")
     # greatest(.., 1): a source with > 1e6 docs floors its lowest
     # ranks to rank_ppm = 0 → ceiling band 0, which the inner join to
     # the 1..100 grid would silently drop (r9 advice). Clamp into the
@@ -148,9 +144,9 @@ def source_score_quantile_norm(
         "source",
         "score_ppm",
         "n_docs",
-        rank_ppm.alias("rank_ppm"),
+        F.expr(rank_ppm).alias("rank_ppm"),
         F.greatest(
-            floordiv(rank_ppm + F.lit(BAND_PPM - 1), F.lit(BAND_PPM)),
+            F.expr(ss_floordiv(f"{rank_ppm} + {BAND_PPM - 1}", str(BAND_PPM))),
             F.lit(1),
         ).alias("pct_band"),
     )
@@ -165,9 +161,8 @@ def source_score_quantile_norm(
     )
     band_min = pool_rk.groupBy(
         F.greatest(
-            floordiv(
-                ppm(F.col("cum"), F.col("n")) + F.lit(BAND_PPM - 1),
-                F.lit(BAND_PPM),
+            F.expr(
+                ss_floordiv(f"{ss_ppm('cum', 'n')} + {BAND_PPM - 1}", str(BAND_PPM))
             ),
             F.lit(1),
         ).alias("band")

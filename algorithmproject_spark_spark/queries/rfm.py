@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import sum_money
+from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -128,7 +128,7 @@ def _register() -> None:
         per_cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
             F.expr("max(to_date(o_orderdate)) AS last_order"),
             F.expr("count(1) AS frequency"),
-            sum_money("o_totalprice").alias("monetary_e2"),
+            F.expr(f"sum({ss_scaled_long('o_totalprice')})").alias("monetary_e2"),
         )
         rfm = (
             per_cust.crossJoin(F.broadcast(anchor))

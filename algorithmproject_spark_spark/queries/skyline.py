@@ -34,10 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import (
-    scaled_long,
-    sql_scaled_long,
-)
+from algorithmproject_spark_spark.functions.numeric import sql_scaled_long, ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -81,7 +78,7 @@ from algorithmproject_spark_spark.sources.catalog import load_table
 def part_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = load_table(spark, sf_dir, "part").select(
         "p_partkey",
-        scaled_long("p_retailprice").alias("price_c"),
+        F.expr(ss_scaled_long("p_retailprice")).alias("price_c"),
         F.col("p_size").cast("long").alias("size"),
     )
     # one candidate point per distinct price — the window below rides

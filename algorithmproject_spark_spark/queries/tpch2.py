@@ -13,7 +13,7 @@ shapes here are the superset a user migrating real warehouse queries
 needs).
 
 Determinism contract (same as relational.py): every money/quantity
-aggregate goes through ``scaled_long`` fixed-point BIGINTs; every
+aggregate goes through ``ss_scaled_long`` fixed-point BIGINTs; every
 threshold that TPC-H states as a float ratio (``0.2 * avg(...)``,
 ``0.5 * sum(...)``, ``> avg(...)``) is cross-multiplied into a pure
 integer inequality so Spark and DuckDB agree bit-for-bit at any SF and
@@ -31,16 +31,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
 
-def _rev_e4() -> F.Column:
-    """Per-line discounted revenue as exact e4 fixed-point."""
-    return scaled_long(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")), 10000
-    )
+#: per-line discounted revenue as exact e4 fixed-point
+_REV_E4 = ss_scaled_long("l_extendedprice * (1 - l_discount)", 10000)
 
 
 _SQL_REV_E4 = (
@@ -108,7 +105,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spc = (
         li.groupBy("l_partkey", "l_suppkey")
-        .agg(F.min(scaled_long("l_extendedprice", 100)).alias("cost_e2"))
+        .agg(F.expr(f"min({ss_scaled_long('l_extendedprice', 100)})").alias("cost_e2"))
         .join(F.broadcast(eur), F.col("l_suppkey") == eur.s_suppkey)
         .select("l_partkey", "cost_e2", "s_name", "n_name")
     )
@@ -187,7 +184,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").cast("bigint").alias("l_year"),
         )
-        .agg(F.sum(_rev_e4()).alias("revenue_e4"))
+        .agg(F.expr(f"sum({_REV_E4})").alias("revenue_e4"))
     )
 
 
@@ -233,10 +230,11 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp_n = supp.join(
         F.broadcast(nation), supp.s_nationkey == nation.n_nationkey
     ).select("s_suppkey", F.col("n_name").alias("nation"))
-    profit = scaled_long(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-        - F.col("p_retailprice") * F.col("l_quantity"),
-        10000,
+    profit = F.expr(
+        ss_scaled_long(
+            "l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity",
+            10000,
+        )
     )
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -291,7 +289,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = (
         li.join(F.broadcast(natsupp), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(scaled_long("l_extendedprice", 100)).alias("value_e2"))
+        .agg(F.expr(f"sum({ss_scaled_long('l_extendedprice', 100)})").alias("value_e2"))
     )
     total = pv.agg(F.sum("value_e2").alias("total_e2"))
     return (
@@ -424,7 +422,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_rev_e4()).alias("total_revenue_e4"))
+        .agg(F.expr(f"sum({_REV_E4})").alias("total_revenue_e4"))
     )
     mx = rev.agg(F.max("total_revenue_e4").alias("max_rev_e4"))
     return (
@@ -514,18 +512,18 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_brand") == "Brand#2"
     ).select("p_partkey")
     pq = li.groupBy(F.col("l_partkey").alias("pk")).agg(
-        F.sum(scaled_long("l_quantity", 100)).alias("sum_qty_e2"),
+        F.expr(f"sum({ss_scaled_long('l_quantity', 100)})").alias("sum_qty_e2"),
         F.count(F.lit(1)).alias("cnt"),
     )
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(pq, li.l_partkey == pq.pk)
         .filter(
-            scaled_long("l_quantity", 100) * 5 * F.col("cnt")
+            F.expr(ss_scaled_long("l_quantity", 100)) * 5 * F.col("cnt")
             < F.col("sum_qty_e2")
         )
         .agg(
-            F.sum(scaled_long("l_extendedprice", 100)).alias(
+            F.expr(f"sum({ss_scaled_long('l_extendedprice', 100)})").alias(
                 "small_qty_revenue_cents"
             ),
             F.count(F.lit(1)).alias("n_lines"),
@@ -573,7 +571,7 @@ def q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "EUROPE"
     )
-    qty_e2 = scaled_long("l_quantity", 100)
+    qty_e2 = F.expr(ss_scaled_long("l_quantity", 100))
     sp = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
@@ -711,17 +709,19 @@ def q22_global_sales_opportunity(
         .select(F.col("o_custkey").alias("c_custkey"))
     )
     pos = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        F.sum(scaled_long("c_acctbal", 100)).alias("sum_e2"),
+        F.expr(f"sum({ss_scaled_long('c_acctbal', 100)})").alias("sum_e2"),
         F.count(F.lit(1)).alias("cnt"),
     )
     return (
         cust.join(orders, "c_custkey", "left_anti")
         .crossJoin(F.broadcast(pos))
-        .filter(scaled_long("c_acctbal", 100) * F.col("cnt") > F.col("sum_e2"))
+        .filter(
+            F.expr(ss_scaled_long("c_acctbal", 100)) * F.col("cnt") > F.col("sum_e2")
+        )
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(scaled_long("c_acctbal", 100)).alias("totacctbal_e2"),
+            F.expr(f"sum({ss_scaled_long('c_acctbal', 100)})").alias("totacctbal_e2"),
         )
     )
 

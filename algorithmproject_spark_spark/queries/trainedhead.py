@@ -60,25 +60,15 @@ from algorithmproject_spark_spark.functions.hashing import (
     GRAM_MULT,
     MOD,
     MULT,
-    bind_once,
-    gram_hash_array,
     sql_char_fold_hash,
     sql_gram_hash_array,
     ss_bind,
     ss_gram_hash_array,
     ss_token_hash_array,
-    token_hash_array,
 )
-from algorithmproject_spark_spark.functions.numeric import micros, ss_micros
-from algorithmproject_spark_spark.functions.text import (
-    ss_stopword_array,
-    stopword_array,
-    tokenize,
-)
-from algorithmproject_spark_spark.queries.modeleval import (
-    _label_from_toks,
-    _LBL_SQL,
-)
+from algorithmproject_spark_spark.functions.numeric import ss_micros
+from algorithmproject_spark_spark.functions.text import ss_stopword_array
+from algorithmproject_spark_spark.queries.modeleval import _LBL_SQL
 from algorithmproject_spark_spark.queries.qualitymodel import (
     QMB_DIM,
     _sql_quality_prefix,
@@ -94,17 +84,14 @@ B_REP = QMB_DIM + 100  # 10 repetition bands: rep_ratio_e6 div 1e5
 B_SW = QMB_DIM + 200  # 10 stopword bands: sw_ratio_e6 div 1e5
 
 
-def _bucket_cols(th: Column) -> Column:
-    """(n_feats, buckets) struct — the EXACT token feature map of
-    quality_model_score_bcast (hashed unigrams + word bigrams mod
-    QMB_DIM), shared so trained weights plug into that plan."""
-    n_feats = F.size(th) + F.greatest(F.size(th) - F.lit(1), F.lit(0))
-    buckets = F.concat(
-        F.transform(th, lambda h: h % F.lit(QMB_DIM)),
-        F.transform(gram_hash_array(th, 2), lambda h: h % F.lit(QMB_DIM)),
-    )
-    return F.struct(
-        n_feats.cast("long").alias("n_feats"), buckets.alias("buckets")
+def _ss_token_buckets(th: str) -> str:
+    """Hashed-unigram and word-bigram bucket arrays (mod QMB_DIM) of a
+    bound token-hash array — the EXACT token feature map of
+    quality_model_score_bcast, shared so trained weights plug into that
+    plan. Two comma-separated arguments for ``concat``."""
+    return (
+        f"transform({th}, bh_ -> bh_ % {QMB_DIM}), "
+        f"transform({ss_gram_hash_array(th, 2)}, bh_ -> bh_ % {QMB_DIM})"
     )
 
 
@@ -116,36 +103,20 @@ def _exploded(docs: DataFrame, extra: tuple = ()) -> DataFrame:
     fs = docs.select(
         "doc_id",
         *extra,
-        bind_once(token_hash_array(tokenize("text")), _bucket_cols).alias(
-            "fs"
-        ),
+        F.expr(
+            ss_bind(
+                ss_token_hash_array("split(text, ' ')"),
+                "th_",
+                f"named_struct('n_feats', {_SS_N_FEATS.format(t='th_')}, "
+                f"'buckets', concat({_ss_token_buckets('th_')}))",
+            )
+        ).alias("fs"),
     )
     names = [f.name for f in fs.schema.fields if f.name != "fs"]
     return fs.select(
         *names,
         F.col("fs.n_feats").alias("n_feats"),
         F.explode("fs.buckets").alias("b"),
-    )
-
-
-def _band_array(toks: Column) -> Column:
-    """[b_len, b_rep, b_sw] bucket ids from an already-bound token
-    array — the binned-scalar features, from the SAME quantities the
-    heuristic label reads (so the twin reuses the registered label
-    SQL's columns)."""
-    n_tokens = F.size(toks)
-    sw = F.size(
-        F.filter(toks, lambda t: F.array_contains(stopword_array(), t))
-    )
-    sw_e6 = micros(sw.cast("double") / n_tokens)
-    rep_e6 = micros(
-        F.size(F.array_distinct(toks)).cast("double") / n_tokens
-    )
-    d = lambda c, k: F.call_function("div", c.cast("long"), F.lit(k))  # noqa: E731
-    return F.array(
-        (F.lit(B_LEN) + F.least(d(n_tokens, 20), F.lit(19).cast("long"))),
-        (F.lit(B_REP) + F.least(d(rep_e6, 100_000), F.lit(9).cast("long"))),
-        (F.lit(B_SW) + F.least(d(sw_e6, 100_000), F.lit(9).cast("long"))),
     )
 
 
@@ -205,8 +176,10 @@ def _feature_rows(with_label: bool) -> Column:
 
 
 def _ss_band_array(toks: str) -> str:
-    """Spark-SQL text twin of :func:`_band_array` over a bound token
-    variable (see functions/hashing.py ss_* rationale)."""
+    """[b_len, b_rep, b_sw] bucket ids from an already-bound token
+    array variable — the binned-scalar features, from the SAME
+    quantities the heuristic label reads (so the twin reuses the
+    registered label SQL's columns)."""
     n_tokens = f"size({toks})"
     sw = (
         f"size(filter({toks}, swt_ -> "
@@ -228,12 +201,7 @@ def _ss_band_array(toks: str) -> str:
 def _ss_buckets(th: str, toks: str) -> str:
     """Token + bigram + band bucket ids as one array — text twin of the
     ``buckets`` concat in :func:`_feature_rows`."""
-    return (
-        f"concat("
-        f"transform({th}, bh_ -> bh_ % {QMB_DIM}), "
-        f"transform({ss_gram_hash_array(th, 2)}, bh_ -> bh_ % {QMB_DIM}), "
-        f"{_ss_band_array(toks)})"
-    )
+    return f"concat({_ss_token_buckets(th)}, {_ss_band_array(toks)})"
 
 
 _SS_N_FEATS = "CAST(size({t}) + greatest(size({t}) - 1, 0) AS BIGINT)"

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -59,7 +59,7 @@ def window_global_rownum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
-        scaled_long("o_totalprice", 100).desc(), F.col("o_orderkey").asc()
+        F.expr(ss_scaled_long("o_totalprice", 100)).desc(), F.col("o_orderkey").asc()
     )
     return (
         orders.withColumn("rk", F.row_number().over(w))
@@ -113,7 +113,9 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(scaled_long("o_totalprice", 100)).over(w).alias("running_cents"),
+        F.expr(f"sum({ss_scaled_long('o_totalprice', 100)})")
+        .over(w)
+        .alias("running_cents"),
     )
 
 
@@ -174,8 +176,8 @@ def window_ntile_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return q.groupBy("c_mktsegment", "quartile").agg(
         F.count(F.lit(1)).alias("n"),
-        F.min(scaled_long("o_totalprice", 100)).alias("min_cents"),
-        F.max(scaled_long("o_totalprice", 100)).alias("max_cents"),
+        F.expr(f"min({ss_scaled_long('o_totalprice', 100)})").alias("min_cents"),
+        F.expr(f"max({ss_scaled_long('o_totalprice', 100)})").alias("max_cents"),
     )
 
 
@@ -202,13 +204,18 @@ def window_ntile_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_rank_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
+    w_sql = "PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey"
     return orders.select(
         "o_orderkey",
         "o_orderstatus",
         F.rank().over(w).alias("rnk"),
         F.dense_rank().over(w).alias("drnk"),
-        scaled_long(F.percent_rank().over(w), 1000000).alias("pct_rank_e6"),
-        scaled_long(F.cume_dist().over(w), 1000000).alias("cume_e6"),
+        F.expr(ss_scaled_long(f"percent_rank() OVER ({w_sql})", 1000000)).alias(
+            "pct_rank_e6"
+        ),
+        F.expr(ss_scaled_long(f"cume_dist() OVER ({w_sql})", 1000000)).alias(
+            "cume_e6"
+        ),
         F.first("o_orderkey").over(w).alias("first_key"),
     )
 
@@ -255,6 +262,8 @@ def window_trailing_2h_range_frame(
         "event_id",
         "user_id",
         "ts",
-        F.sum(scaled_long("value", 1000000)).over(w).alias("trailing_2h_e6"),
+        F.expr(f"sum({ss_scaled_long('value', 1000000)})")
+        .over(w)
+        .alias("trailing_2h_e6"),
         F.count(F.lit(1)).over(w).alias("trailing_2h_n"),
     )

@@ -61,7 +61,7 @@ def py_hdr_bucket(v: int) -> int:
 
 
 def py_hdr_rep(idx: int) -> int:
-    """Python twin of queries.hdr.hdr_rep / sql_hdr_rep."""
+    """Python twin of queries.hdr.ss_hdr_rep / sql_hdr_rep."""
     if idx < SUB:
         return idx
     return (((idx - SUB) % SUB + SUB + 1) << ((idx - SUB) // SUB)) - 1

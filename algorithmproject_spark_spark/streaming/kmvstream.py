@@ -66,7 +66,7 @@ def _tmod(a: int, m: int) -> int:
 
 
 def _hash_key(uid: int) -> int:
-    """Python twin of functions.numeric.hash_mod(key, KMV_MOD) —
+    """Python twin of functions.numeric.ss_hash_mod(key, KMV_MOD) —
     truncated-modulo exact, including negative keys."""
     return _tmod(_tmod(uid, HASH_REDUCE) * HASH_MULT, KMV_MOD)
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_scaled_long
 
 
 def windowed_value_agg(
@@ -39,7 +39,7 @@ def windowed_value_agg(
         .groupBy(win.alias("w"), type_col)
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long(value_col, 100)).alias("value_cents"),
+            F.expr(f"sum({ss_scaled_long(value_col, 100)})").alias("value_cents"),
         )
         .select(
             F.col("w.start").alias("window_start"),

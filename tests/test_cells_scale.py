@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from algorithmproject_spark_spark.operators.annivf import (
     K_CELLS,
-    cell_col,
     cells_for,
     centroids_for,
+    ss_cell,
 )
 
 TARGET = 50
@@ -34,7 +34,7 @@ def _cell_sizes(spark, n: int) -> list[int]:
     k = cells_for(n, TARGET)
     df = (
         _synthetic_embeddings(spark, n)
-        .select(cell_col(F.col("embedding"), k).alias("cell"))
+        .select(F.expr(ss_cell("embedding", k)).alias("cell"))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )

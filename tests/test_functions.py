@@ -8,18 +8,23 @@ from pyspark.sql import functions as F
 from algorithmproject_spark_spark.functions.hashing import (
     MOD,
     MULT,
-    char_fold_hash,
-    minhash_value,
-    token_hash_array,
+    ss_char_fold_hash,
+    ss_minhash_value,
+    ss_token_hash_array,
 )
-from algorithmproject_spark_spark.functions.numeric import micros, scaled_long
+from algorithmproject_spark_spark.functions.numeric import ss_micros, ss_scaled_long
 from algorithmproject_spark_spark.functions.text import (
     clean_text,
     ngrams,
     stopword_count,
     tokenize,
 )
-from algorithmproject_spark_spark.functions.vectors import cosine, dot, norm
+from algorithmproject_spark_spark.functions.vectors import (
+    ss_cosine,
+    ss_dot,
+    ss_norm,
+    ss_to_double,
+)
 
 
 def _one(spark, col):
@@ -35,11 +40,11 @@ def _py_fold(s: str) -> int:
 
 def test_char_fold_hash_matches_python(spark):
     for s in ["abc", "hello world", "x", ""]:
-        assert _one(spark, char_fold_hash(F.lit(s))) == _py_fold(s)
+        assert _one(spark, F.expr(ss_char_fold_hash(f"'{s}'"))) == _py_fold(s)
 
 
 def test_token_hash_array(spark):
-    got = _one(spark, token_hash_array(F.lit(["ab", "cd"])))
+    got = _one(spark, F.expr(ss_token_hash_array("array('ab', 'cd')")))
     assert got == [_py_fold("ab"), _py_fold("cd")]
 
 
@@ -48,7 +53,10 @@ def test_minhash_is_min_of_affine(spark):
     a, b = 17, 91
     expected = min((a * h + b) % MOD for h in hashes)
     got = _one(
-        spark, minhash_value(token_hash_array(F.lit(["ab", "cd", "ef"])), a, b)
+        spark,
+        F.expr(
+            ss_minhash_value(ss_token_hash_array("array('ab', 'cd', 'ef')"), a, b)
+        ),
     )
     assert got == expected
 
@@ -61,9 +69,9 @@ def test_ngrams_basic_and_short(spark):
 
 
 def test_scaled_long_exact_cents(spark):
-    assert _one(spark, scaled_long(F.lit(1.15), 100)) == 115
-    assert _one(spark, scaled_long(F.lit(0.07), 100)) == 7
-    assert _one(spark, micros(F.lit(0.5))) == 500000
+    assert _one(spark, F.expr(ss_scaled_long("1.15D", 100))) == 115
+    assert _one(spark, F.expr(ss_scaled_long("0.07D", 100))) == 7
+    assert _one(spark, F.expr(ss_micros("0.5D"))) == 500000
 
 
 def test_clean_text(spark):
@@ -76,10 +84,10 @@ def test_tokenize_and_stopwords(spark):
 
 
 def test_vector_ops(spark):
-    a, b = F.lit([1.0, 2.0, 2.0]), F.lit([2.0, 0.0, 0.0])
-    assert _one(spark, dot(a, b)) == 2.0
-    assert _one(spark, norm(a)) == 3.0
-    got = _one(spark, cosine(a, b))
+    a, b = "array(1.0D, 2.0D, 2.0D)", "array(2.0D, 0.0D, 0.0D)"
+    assert _one(spark, F.expr(ss_dot(ss_to_double(a), ss_to_double(b)))) == 2.0
+    assert _one(spark, F.expr(ss_norm(ss_to_double(a)))) == 3.0
+    got = _one(spark, F.expr(ss_cosine(a, b)))
     assert abs(got - 2.0 / (3.0 * 2.0)) < 1e-12
 
 
@@ -119,11 +127,17 @@ def test_hash_mod_overflow_safe_and_cross_engine(spark):
     straddling that boundary."""
     import duckdb
 
-    from algorithmproject_spark_spark.functions.numeric import hash_mod, sql_hash_mod
+    from algorithmproject_spark_spark.functions.numeric import (
+        sql_hash_mod,
+        ss_hash_mod,
+    )
 
     keys = [0, 1, 3_470_000_000, 2**40, 2**62, 9_223_372_036_854_775_807]
     df = spark.createDataFrame([(k,) for k in keys], "k long")
-    got = {r.k: r.b for r in df.select("k", hash_mod("k", 10).alias("b")).collect()}
+    got = {
+        r.k: r.b
+        for r in df.select("k", F.expr(ss_hash_mod("k", 10)).alias("b")).collect()
+    }
     con = duckdb.connect()
     for k in keys:
         (want,) = con.execute(

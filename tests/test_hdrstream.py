@@ -14,9 +14,9 @@ from algorithmproject_spark_spark.queries import REGISTRY
 from algorithmproject_spark_spark.queries.hdr import (
     PCTS,
     hdr_bucket,
-    hdr_rep,
     sql_hdr_bucket,
     sql_hdr_rep,
+    ss_hdr_rep,
 )
 from algorithmproject_spark_spark.sources.catalog import load_table
 from algorithmproject_spark_spark.streaming.hdrstream import (
@@ -36,7 +36,7 @@ def test_bucket_and_rep_three_engine_battery(spark):
     df = spark.createDataFrame([Row(v=v) for v in BATTERY])
     got = df.select(
         "v", hdr_bucket(F.col("v")).alias("b")
-    ).withColumn("r", hdr_rep(F.col("b"))).collect()
+    ).withColumn("r", F.expr(ss_hdr_rep("b"))).collect()
     con = duckdb.connect()
     for row in got:
         v = row["v"]

@@ -95,7 +95,7 @@ def test_hashed_tfidf_agrees_with_exact_path(spark):
     the exact-string path's."""
     from pyspark.sql import functions as F
 
-    from algorithmproject_spark_spark.functions.hashing import char_fold_hash
+    from algorithmproject_spark_spark.functions.hashing import ss_char_fold_hash
     from algorithmproject_spark_spark.queries.text import (
         TFIDF_NUM_FEATURES,
         hashed_tfidf,
@@ -107,7 +107,7 @@ def test_hashed_tfidf_agrees_with_exact_path(spark):
     docs = load_table(spark, sf, "documents")
     # precondition: the fixture vocab actually is collision-free at 2^18
     words = docs.select(F.explode(F.split("text", " ")).alias("w")).distinct()
-    hashed = words.select((char_fold_hash(F.col("w")) % TFIDF_NUM_FEATURES).alias("h"))
+    hashed = words.select((F.expr(ss_char_fold_hash("w")) % TFIDF_NUM_FEATURES).alias("h"))
     assert hashed.distinct().count() == words.count()
 
     def per_doc(df):

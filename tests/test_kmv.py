@@ -52,7 +52,7 @@ def test_merge_equals_direct_global_sketch(spark):
     that makes per-source/per-day sketches sufficient at scale)."""
     from pyspark.sql import functions as F
 
-    from algorithmproject_spark_spark.functions.numeric import hash_mod
+    from algorithmproject_spark_spark.functions.numeric import ss_hash_mod
     from algorithmproject_spark_spark.queries.kmv import (
         KMV_K,
         KMV_MOD,
@@ -61,7 +61,7 @@ def test_merge_equals_direct_global_sketch(spark):
 
     rows = [(i % 7, (i * 37) % 500) for i in range(3000)]
     df = spark.createDataFrame(rows, ["g", "key"])
-    h = hash_mod(F.col("key").cast("long"), KMV_MOD)
+    h = F.expr(ss_hash_mod("CAST(key AS BIGINT)", KMV_MOD))
     per_group = (
         df.select("g", h.alias("h"))
         .groupBy("g")

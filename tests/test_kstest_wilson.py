@@ -16,8 +16,6 @@ def _ppm(count: int, total: int) -> int:
 
 
 def test_ks_matrix_matches_python(spark):
-    from pyspark.sql import functions as F
-
     from algorithmproject_spark_spark.queries.qualitymodel import (
         quality_logit_cols,
     )
@@ -25,7 +23,7 @@ def test_ks_matrix_matches_python(spark):
 
     rows = (
         load_table(spark, SF, "documents")
-        .select("source", quality_logit_cols(F.col("text"))[2])
+        .select("source", quality_logit_cols("text")[2])
         .collect()
     )
     per_src: dict[str, list[int]] = {}

@@ -13,7 +13,7 @@ def test_split_leakage_consistent_with_parts(spark):
     relation and the split assignment computed independently."""
     from pyspark.sql import functions as F
 
-    from algorithmproject_spark_spark.functions.numeric import hash_mod
+    from algorithmproject_spark_spark.functions.numeric import ss_hash_mod
     from algorithmproject_spark_spark.queries.dedup import (
         jaccard_pairs_above,
     )
@@ -25,7 +25,7 @@ def test_split_leakage_consistent_with_parts(spark):
     from algorithmproject_spark_spark.sources.catalog import load_table
 
     docs = load_table(spark, SF, "documents")
-    bucket = hash_mod("doc_id", SPLIT_MOD)
+    bucket = F.expr(ss_hash_mod("doc_id", SPLIT_MOD))
     split_col = (
         F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
         .when(bucket < SPLIT_VAL_LT, F.lit("val"))

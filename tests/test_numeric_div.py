@@ -1,4 +1,4 @@
-"""Exact integer division (functions/numeric.floordiv) — the
+"""Exact integer division (functions/numeric.ss_floordiv) — the
 adversarial-review counterexample class: double `/` + cast goes one
 ulp low past 2^53, silently diverging from DuckDB's exact `//`."""
 
@@ -8,9 +8,9 @@ import duckdb
 from pyspark.sql import functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    floordiv,
-    ppm,
     sql_ppm,
+    ss_floordiv,
+    ss_ppm,
 )
 
 # (num, den) pairs chosen so num > 2^53 and the double quotient lands
@@ -28,7 +28,7 @@ CASES = [
 def test_floordiv_matches_python_int_division(spark):
     df = spark.createDataFrame(CASES, ["a", "b"])
     got = sorted(
-        r.q for r in df.select(floordiv(F.col("a"), F.col("b")).alias("q")).collect()
+        r.q for r in df.select(F.expr(ss_floordiv("a", "b")).alias("q")).collect()
     )
     assert got == sorted(a // b for a, b in CASES)
 
@@ -36,7 +36,7 @@ def test_floordiv_matches_python_int_division(spark):
 def test_ppm_counterexample_matches_duckdb(spark):
     c, n = 148_511_503_890_311, 166_822_422_712_862
     df = spark.createDataFrame([(c, n)], ["c", "n"])
-    got = df.select(ppm(F.col("c"), F.col("n")).alias("p")).first().p
+    got = df.select(F.expr(ss_ppm("c", "n")).alias("p")).first().p
     want = duckdb.connect().execute(
         f"SELECT {sql_ppm(str(c), str(n))}"
     ).fetchone()[0]

@@ -517,12 +517,12 @@ def test_ppm_equals_unbounded_integer_math(spark, pairs):
     Python's unbounded ints, across its documented precondition
     (count <= total — ppm is a proportion; the hypothesis run that
     violated it found the q*1000 wrap now pinned in the docstring)."""
-    from algorithmproject_spark_spark.functions.numeric import ppm
+    from algorithmproject_spark_spark.functions.numeric import ss_ppm
 
     pairs = [(min(c, n), n) for c, n in pairs]
     df = spark.createDataFrame(pairs, ["c", "n"])
     got = [
-        r.p for r in df.select(ppm(F.col("c"), F.col("n")).alias("p")).collect()
+        r.p for r in df.select(F.expr(ss_ppm("c", "n")).alias("p")).collect()
     ]
     want = [c * 1_000_000 // n for c, n in pairs]
     assert sorted(got) == sorted(want)
@@ -549,8 +549,8 @@ def test_ratio_e6_equals_unbounded_integer_math(spark, pairs):
     import duckdb
 
     from algorithmproject_spark_spark.functions.numeric import (
-        ratio_e6,
         sql_ratio_e6,
+        ss_ratio_e6,
     )
 
     # keep the integer part under ratio_e6's documented ~9.2e12 bound
@@ -560,7 +560,7 @@ def test_ratio_e6_equals_unbounded_integer_math(spark, pairs):
     df = spark.createDataFrame(pairs, ["n", "d"])
     got = [
         r.p
-        for r in df.select(ratio_e6(F.col("n"), F.col("d")).alias("p")).collect()
+        for r in df.select(F.expr(ss_ratio_e6("n", "d")).alias("p")).collect()
     ]
     want = [n * 1_000_000 // d for n, d in pairs]
     assert sorted(got) == sorted(want)

@@ -11,7 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row, functions as F
 
-from algorithmproject_spark_spark.functions.numeric import ppm_wide
+from algorithmproject_spark_spark.functions.numeric import ss_ppm_wide
 from algorithmproject_spark_spark.queries.behavior import events_state_islands
 from algorithmproject_spark_spark.queries.profiling import (
     PCTS,
@@ -42,7 +42,7 @@ def test_ppm_wide_equals_exact_division(spark, cases):
     df = spark.createDataFrame(cases, "c long, t long")
     got = [
         r.p
-        for r in df.select(ppm_wide(F.col("c"), F.col("t")).alias("p"))
+        for r in df.select(F.expr(ss_ppm_wide("c", "t")).alias("p"))
         .collect()
     ]
     assert got == [c * 10**6 // t for c, t in cases]

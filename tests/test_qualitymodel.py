@@ -51,7 +51,7 @@ def test_scored_columns_match_python_reference(spark):
     rows = {
         r["doc_id"]: r
         for r in df.select(
-            "doc_id", *quality_logit_cols(F.col("text"))
+            "doc_id", *quality_logit_cols("text")
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -138,7 +138,7 @@ def test_spark_matches_python_on_irregular_whitespace(spark):
     rows = {
         r["doc_id"]: r
         for r in df.select(
-            "doc_id", *quality_logit_cols(F.col("text"))
+            "doc_id", *quality_logit_cols("text")
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -178,7 +178,7 @@ def test_bcast_variant_agrees_with_literal_head_shape(spark):
     lit_nf = {
         r["doc_id"]: r["n_feats"]
         for r in load_table(spark, sf, "documents")
-        .select("doc_id", *quality_logit_cols(F.col("text")))
+        .select("doc_id", *quality_logit_cols("text"))
         .collect()
     }
     bc = {

@@ -25,7 +25,7 @@ def test_quantile_norm_matches_python(spark):
     sc = [
         (r["source"], r["score_ppm"])
         for r in docs.select(
-            "source", quality_logit_cols(F.col("text"))[2]
+            "source", quality_logit_cols("text")[2]
         ).collect()
     ]
     # pooled band -> cut score (step function with reverse fill)
@@ -100,7 +100,7 @@ def test_no_rows_dropped_at_million_doc_source(spark, tmp_path):
     texts = ["aa bb", "cc dd ee", "ff", "gg hh ii jj", "kk ll"]
     scored = (
         spark.createDataFrame([(t,) for t in texts], "text string")
-        .select("text", quality_logit_cols(F.col("text"))[2])
+        .select("text", quality_logit_cols("text")[2])
         .collect()
     )
     low = min(scored, key=lambda r: r["score_ppm"])["text"]

@@ -9,8 +9,8 @@ import duckdb
 from pyspark.sql import Row, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
-    ppm_wide,
     sql_ppm_wide,
+    ss_ppm_wide,
 )
 from algorithmproject_spark_spark.queries.behavior import user_first_last_flows
 from algorithmproject_spark_spark.queries.revenue import (
@@ -34,7 +34,7 @@ PPM_WIDE_CASES = [
 def test_ppm_wide_exact_on_both_engines(spark):
     df = spark.createDataFrame(PPM_WIDE_CASES, "c long, t long")
     got = [
-        r.p for r in df.select(ppm_wide(F.col("c"), F.col("t")).alias("p"))
+        r.p for r in df.select(F.expr(ss_ppm_wide("c", "t")).alias("p"))
         .collect()
     ]
     want = [c * 10**6 // t for c, t in PPM_WIDE_CASES]

@@ -828,14 +828,14 @@ def test_kmv_sketch_stream_equals_batch(spark, scratch):
 
 def test_kmv_python_hash_twin_matches_engines_for_negative_keys(spark):
     """The streaming sketch's Python hash must equal the Spark/DuckDB
-    hash_mod INCLUDING negative keys — Python's % is floored while the
+    ss_hash_mod INCLUDING negative keys — Python's % is floored while the
     engines truncate, the divergence _tmod exists to remove."""
     import duckdb
     from pyspark.sql import functions as F
 
     from algorithmproject_spark_spark.functions.numeric import (
-        hash_mod,
         sql_hash_mod,
+        ss_hash_mod,
     )
     from algorithmproject_spark_spark.queries.kmv import KMV_MOD
     from algorithmproject_spark_spark.streaming.kmvstream import _hash_key
@@ -844,7 +844,7 @@ def test_kmv_python_hash_twin_matches_engines_for_negative_keys(spark):
     df = spark.createDataFrame([(k,) for k in keys], "k long")
     spark_vals = [
         r.h
-        for r in df.select(hash_mod(F.col("k"), KMV_MOD).alias("h"))
+        for r in df.select(F.expr(ss_hash_mod("k", KMV_MOD)).alias("h"))
         .collect()
     ]
     con = duckdb.connect()

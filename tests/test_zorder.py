@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from algorithmproject_spark_spark.operators.zorder import (
-    rank16_exact,
+    ss_rank16,
     spread_bits16,
     write_zordered,
     zvalue16,
@@ -43,13 +43,13 @@ def test_rank16_endpoints_and_floor(spark):
     df = spark.createDataFrame([(0,), (50,), (100,)], ["x"])
     out = sorted(
         r.rk for r in df.select(
-            rank16_exact(F.col("x"), F.lit(0), F.lit(100)).alias("rk")
+            F.expr(ss_rank16("x", "0", "100")).alias("rk")
         ).collect()
     )
     assert out[0] == 0 and out[-1] == 65535
     assert out[1] == 50 * 65535 // 100
     # degenerate range maps to 0 instead of dividing by zero
-    z = df.select(rank16_exact(F.col("x"), F.lit(7), F.lit(7)).alias("rk"))
+    z = df.select(F.expr(ss_rank16("x", "7", "7")).alias("rk"))
     assert {r.rk for r in z.collect()} == {0}
 
 
@@ -69,8 +69,8 @@ def test_write_zordered_files_have_disjoint_z_ranges(spark, tmp_path):
         F.min("tsec").alias("b_min"), F.max("tsec").alias("b_max"),
     )
     z = zvalue16(
-        rank16_exact(F.col("user_id"), F.col("a_min"), F.col("a_max")),
-        rank16_exact(F.col("tsec"), F.col("b_min"), F.col("b_max")),
+        F.expr(ss_rank16("user_id", "a_min", "a_max")),
+        F.expr(ss_rank16("tsec", "b_min", "b_max")),
     )
     # tag the source file BEFORE the broadcast join — input_file_name()
     # refuses multi-source expressions

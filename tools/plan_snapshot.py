@@ -10,6 +10,10 @@ plan diff long before an oracle run would catch it.
 Usage: python tools/plan_snapshot.py <outdir> [query ...]
 (no queries = whole registry). $SPARK_GRAFT_SF_DIR picks the data
 (default sf0.001 — plan shape only, so the smallest fixture is right).
+
+A query whose build raises is written as ``BUILD FAILED: …`` and the
+run exits 1 after listing the failed names, so a before/after diff in
+which both sides failed to build can never pass as "identical".
 """
 
 from __future__ import annotations
@@ -47,18 +51,23 @@ def main() -> int:
     from algorithmproject_spark_spark.cacheutil import release_caches
     from algorithmproject_spark_spark.queries.itemsets import clear_itemset_cache
 
+    failed = []
     for name in names:
         try:
             df = REGISTRY[name].fn(spark, sf_dir)
             plan = str(df._jdf.queryExecution().optimizedPlan())
         except Exception as exc:
             plan = f"BUILD FAILED: {exc}"
+            failed.append(name)
         with open(os.path.join(outdir, f"{name}.txt"), "w", encoding="utf-8") as fh:
             fh.write(normalize(plan))
         release_caches()
         clear_itemset_cache()
         print(name, flush=True)
     spark.stop()
+    if failed:
+        print(f"BUILD FAILED ({len(failed)}): {' '.join(failed)}", file=sys.stderr)
+        return 1
     return 0
 
 

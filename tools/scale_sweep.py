@@ -318,9 +318,13 @@ def _emb_query(name):
         # that with a hash refinement of the IVF cell to n/TARGET
         # subcells — the join shape (equi-join on the cell key, pairs
         # O(n · cell_size)) is exactly the production plan's.
-        from algorithmproject_spark_spark.functions.numeric import micros
-        from algorithmproject_spark_spark.functions.vectors import _dot_d, _norm_d, to_double
-        from algorithmproject_spark_spark.operators.annivf import cell_col
+        from algorithmproject_spark_spark.functions.numeric import ss_micros
+        from algorithmproject_spark_spark.functions.vectors import (
+            ss_dot,
+            ss_norm,
+            ss_to_double,
+        )
+        from algorithmproject_spark_spark.operators.annivf import ss_cell
         from algorithmproject_spark_spark.queries.llmprep import SEMDEDUP_COS_E6
         from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -334,12 +338,12 @@ def _emb_query(name):
                     "vec_id",
                     F.concat_ws(
                         ":",
-                        cell_col(F.col("embedding")).cast("string"),
+                        F.expr(ss_cell("embedding")).cast("string"),
                         F.pmod(F.xxhash64("vec_id"), F.lit(n_sub)).cast("string"),
                     ).alias("cell"),
-                    to_double(F.col("embedding")).alias("we"),
+                    F.expr(ss_to_double("embedding")).alias("we"),
                 )
-                .withColumn("nrm", _norm_d(F.col("we")))
+                .withColumn("nrm", F.expr(ss_norm("we")))
                 .cache()
             )
             a = cn.select(
@@ -354,10 +358,7 @@ def _emb_query(name):
                 a.join(b, "cell")
                 .filter(F.col("a_id") < F.col("b_id"))
                 .filter(
-                    micros(
-                        _dot_d(F.col("a_we"), F.col("b_we"))
-                        / (F.col("a_n") * F.col("b_n"))
-                    )
+                    F.expr(ss_micros(f"{ss_dot('a_we', 'b_we')} / (a_n * b_n)"))
                     >= SEMDEDUP_COS_E6
                 )
                 .select(F.col("b_id").alias("vec_id"))
