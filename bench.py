@@ -21,12 +21,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from algorithmproject_spark_spark.queries import REGISTRY
-from algorithmproject_spark_spark.session import get_spark
+from tools.measure import Probe, measure_query, reps, start_session
 
 # Headline set: one per operator family, weighted toward shuffle-heavy
 # plans where scale behavior matters.
@@ -462,37 +460,8 @@ def compact_stdout_line(payload: dict, timings: dict, record_name: str) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Steady-state warmup: one trivial job + one tiny parquet read
-    # (region, ~5 rows) amortizes JVM/codegen/parquet-footer init that a
-    # long-running cluster pays once, not per query. No benchmarked
-    # fact table is touched.
-    spark.range(100).count()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    # Python Data Source worker pre-warm: the first pyds read pays
-    # ~2.8 s of Python worker pool spin-up that a long-running cluster
-    # pays once. A 64-row single-partition read through the connector
-    # amortizes it so the benched pyds query records steady-state
-    # connector cost, not process-fork overhead.
-    from algorithmproject_spark_spark.sources.pydatasource import (
-        register_datasource,
-    )
-
-    register_datasource(spark)
-    (
-        spark.read.format("synthetic_events")
-        .option("n_rows", 64)
-        .option("n_partitions", 1)
-        .load()
-        .count()
-    )
-
-    from algorithmproject_spark_spark.cacheutil import release_caches
-    from algorithmproject_spark_spark.queries.itemsets import (
-        clear_itemset_cache,
-    )
+    spark = start_session(sf_dir)
+    probe = Probe(spark)
 
     # VERDICT r9 #6: per-query numbers at 1 rep ride a ±25% VM band —
     # too noisy to verify directive targets one-read. SPARK_GRAFT_BENCH_REPS
@@ -501,7 +470,7 @@ def main() -> None:
     # Default stays 1 so the driver's per-round recording keeps its
     # historical cost and stays comparable to earlier rounds; round-close
     # committed records (BENCH_LOCAL_r{N} / BENCH_SF1_r{N}) use REPS=3.
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "1")))
+    n_reps = reps()
     # SPARK_GRAFT_BENCH_STAT=min (r13, VERDICT r12 #8): this host's
     # contention windows inflate individual reps 2-6x; best-of-N floors
     # are the noise-robust statistic for COMMITTED records. The driver
@@ -510,30 +479,15 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     for name in HEADLINE:
-        spec = REGISTRY[name]
-        samples = []
-        for _ in range(reps):
-            t0 = time.time()
-            df = spec.fn(spark, sf_dir)
-            # Materialize every row without driver-side transfer.
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
-            # Cache-isolate every query (VERDICT r8 #1): without this,
-            # Spark's CacheManager substitutes any matching cached subtree
-            # built by an EARLIER query in the sweep, so per-query numbers
-            # depend on sweep order and are incomparable across rounds
-            # (tfidf_top_terms read 3.1 s or 6.0 s depending on which round's
-            # order warmed the tokenized relation). The release is outside
-            # the timed window — it charges each query its true standalone
-            # cost. Same discipline as tools/shuffle_audit.py.
-            release_caches()
-            clear_itemset_cache()
-        samples.sort()
+        # Each rep is cache-isolated (VERDICT r8 #1) and timed as fn()
+        # plus the noop write, by the loop in tools/measure.py.
+        samples = measure_query(spark, probe, sf_dir, name, n_reps)["samples"]
         timings[name] = (
             samples[0] if stat == "min" else samples[len(samples) // 2]
         )
-        if reps > 1:
+        if n_reps > 1:
             spread[name] = [samples[0], samples[-1]]
+    probe.close()
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -547,7 +501,7 @@ def main() -> None:
         "sf": sf_val,
     }
     if spread:
-        payload["reps"] = reps
+        payload["reps"] = n_reps
         payload["spread"] = spread
     if stat != "median":
         payload["stat"] = stat  # committed min-records are self-describing
@@ -584,10 +538,6 @@ def main() -> None:
     # every number (gated complete by tests/test_bench_artifacts.py).
     line = compact_stdout_line(payload, timings, os.path.basename(out))
     print(line)
-    # Per-query release above already returned storage to zero; one
-    # final sweep for anything the last query left behind.
-    release_caches()
-    clear_itemset_cache()
     spark.stop()
 
 

@@ -1,8 +1,9 @@
 """Shuffle-volume class gate (r7): every registered query's measured
 shuffle/input ratio must stay within its recorded class.
 
-tools/shuffle_audit.py measures real bytes (Spark UI stage totals) for
-the FULL registry and writes SHUFFLE_AUDIT_r{N}.json per round;
+tools/measure.py measures real bytes (status-store stage totals, build
+plus exec stages) for the FULL registry on the engine session and
+writes SHUFFLE_AUDIT_r{N}.json per round;
 SHUFFLE_CLASSES.json records each query's allowed ratio (measured with
 2x + 0.5 headroom, floored at 1.0). This test pins the contract both
 ways:
@@ -15,7 +16,7 @@ ways:
 
 Regenerate after an intentional plan change:
   SHUFFLE_AUDIT_JSON=SHUFFLE_AUDIT_r{N}.json \
-  SHUFFLE_CLASSES_OUT=SHUFFLE_CLASSES.json python tools/shuffle_audit.py
+  SHUFFLE_CLASSES_OUT=SHUFFLE_CLASSES.json python tools/measure.py <sf_dir>
 and let the git diff document the new class.
 """
 
@@ -54,7 +55,7 @@ def test_every_registered_query_has_a_shuffle_class(classes):
 
     missing = sorted(set(REGISTRY) - set(classes))
     assert not missing, (
-        f"queries without a shuffle class (re-run tools/shuffle_audit.py "
+        f"queries without a shuffle class (re-run tools/measure.py "
         f"with SHUFFLE_CLASSES_OUT): {missing}"
     )
 
