@@ -34,13 +34,10 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
-def tokenize(col: Column | str) -> Column:
-    """Whitespace tokenizer (the testdata corpus is space-joined).
-    A string input (column name) takes the one-parse F.expr path
-    (r13): split(col, ' ') is the identical expression either way."""
-    if isinstance(col, str):
-        return F.expr(f"split({col}, ' ')")
-    return F.split(col, " ")
+def tokenize(col: str) -> Column:
+    """Whitespace tokenizer (the testdata corpus is space-joined) over
+    SQL text — a column name or any string expression."""
+    return F.expr(f"split({col}, ' ')")
 
 
 def clean_text(col: Column | str) -> Column:
@@ -91,14 +88,6 @@ def ss_stopword_array() -> str:
     """Spark-SQL text twin of :func:`stopword_array` (one parse instead
     of one py4j lit per word — see functions/hashing.py ss_*)."""
     return "array(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
-
-
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
-def distinct_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokenize(col)))
 
 
 def stopword_count(tokens: Column) -> Column:

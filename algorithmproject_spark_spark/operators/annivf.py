@@ -3,7 +3,8 @@ path, complementing hyperplane LSH (``operators/annlsh.py``).
 
 Classic IVF (inverted-file) search: a coarse quantizer maps every
 vector to its nearest of K cell centroids; a query probes only the
-``NPROBE`` nearest cells and ranks candidates inside them. On a
+``NPROBE`` nearest cells and ranks candidates inside them with the
+shared exact cosine rerank and top-k (operators/anncore.py). On a
 cluster the cell id is just a join key — candidate generation is an
 equi-join the same way the LSH path is, so it shuffles linearly and
 AQE handles cell skew. Recall/latency trade via K and NPROBE.
@@ -25,7 +26,7 @@ import math
 import random
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import (
     sql_hash_mod,
@@ -37,8 +38,13 @@ from algorithmproject_spark_spark.functions.vectors import (
     EMB_DIM,
     sql_cosine,
     ss_arr,
-    ss_cosine,
     ss_to_double,
+)
+from algorithmproject_spark_spark.operators.anncore import (
+    N_QUERIES,
+    TOP_K,
+    cosine_topk,
+    query_side,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -46,8 +52,6 @@ from algorithmproject_spark_spark.sources.catalog import load_table
 K_CELLS = 8
 NPROBE = 2
 DIM = EMB_DIM
-N_QUERIES = 5
-TOP_K = 3
 # production sizing target: with n_cells = ceil(n / TARGET_CELL_SIZE)
 # the within-cell join stays O(n · TARGET_CELL_SIZE) as the corpus grows
 TARGET_CELL_SIZE = 256
@@ -139,19 +143,30 @@ def ss_cell(emb: str, k: int = K_CELLS) -> str:
     return ss_cell_from(emb, centroids_for(k))
 
 
-def ss_probe_cells(emb: str, k: int = K_CELLS) -> str:
-    """The NPROBE nearest cell ids for a query vector.
-
-    The sorted encoding array is lambda-bound: each of the NPROBE
-    ``element_at`` references would otherwise re-sort — and re-compute —
+def _ss_probe_tail(sorted_enc: str, k: int) -> str:
+    """The first NPROBE cell ids of an ascending ``dist * k + cell``
+    encoding array — at most k of them, since ``element_at`` past the
+    end raises under ANSI. The sorted array is lambda-bound: each
+    ``element_at`` reference would otherwise re-sort — and re-compute —
     the whole k-fold encoding array."""
-    inner = f"array_sort({_ss_enc_array_from(emb, centroids_for(k))})"
     parts = ", ".join(
-        f"CAST(element_at(s, {i + 1}) % {k} AS INT)" for i in range(NPROBE)
+        f"CAST(element_at(s, {i + 1}) % {k} AS INT)"
+        for i in range(min(NPROBE, k))
     )
-    return (
-        f"element_at(transform(array({inner}), s -> array({parts})), 1)"
+    return f"element_at(transform(array({sorted_enc}), s -> array({parts})), 1)"
+
+
+def ss_probe_cells_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
+    """The NPROBE nearest cell ids of a query vector for an explicit
+    centroid set (fixed, exported or learned)."""
+    return _ss_probe_tail(
+        f"array_sort({_ss_enc_array_from(emb, cents)})", len(cents)
     )
+
+
+def ss_probe_cells(emb: str, k: int = K_CELLS) -> str:
+    """The NPROBE nearest of the k fixed centroids' cells."""
+    return ss_probe_cells_from(emb, centroids_for(k))
 
 
 def _sql_enc_array_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
@@ -160,10 +175,6 @@ def _sql_enc_array_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
         for i, c in enumerate(cents)
     )
     return f"[{parts}]"
-
-
-def _sql_enc_array(emb: str) -> str:
-    return _sql_enc_array_from(emb, CENTROIDS)
 
 
 def sql_cell_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
@@ -177,30 +188,19 @@ def sql_probe_cells_from(emb: str, cents: Sequence[tuple[float, ...]]) -> str:
     inner = f"list_sort({_sql_enc_array_from(emb, cents)})"
     parts = ", ".join(
         f"CAST(({inner})[{i + 1}] % {len(cents)} AS INT)"
-        for i in range(NPROBE)
+        for i in range(min(NPROBE, len(cents)))
     )
     return f"[{parts}]"
 
 
 def sql_cell(emb: str) -> str:
-    return f"CAST(list_min({_sql_enc_array(emb)}) % {K_CELLS} AS INT)"
+    return sql_cell_from(emb, CENTROIDS)
 
 
-def sql_probe_cells(emb: str) -> str:
-    inner = f"list_sort({_sql_enc_array(emb)})"
-    parts = ", ".join(
-        f"CAST(({inner})[{i + 1}] % {K_CELLS} AS INT)" for i in range(NPROBE)
-    )
-    return f"[{parts}]"
-
-
-def cells(
-    spark: SparkSession, sf_dir: str, n_cells: int | None = None
-) -> DataFrame:
+def cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    k = n_cells or K_CELLS
     return emb.select(
-        "vec_id", "label", "embedding", F.expr(ss_cell("embedding", k)).alias("cell")
+        "vec_id", "label", "embedding", F.expr(ss_cell("embedding")).alias("cell")
     )
 
 
@@ -226,7 +226,7 @@ def ann_ivf_cell_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH b AS ({_SQL_CELLS.format(c=sql_cell('embedding'))}),
     q AS (
         SELECT vec_id AS q_id, embedding AS q_emb,
-               unnest({sql_probe_cells('embedding')}) AS cell
+               unnest({sql_probe_cells_from('embedding', CENTROIDS)}) AS cell
         FROM embeddings WHERE vec_id < {N_QUERIES}
     ),
     scored AS (
@@ -244,36 +244,13 @@ def ann_ivf_cell_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="IVF ANN: probe NPROBE nearest cells, rank candidates by exact "
     "cosine — equi-join on cell key, linear + AQE-skew-safe",
 )
-def ann_ivf_topk(
-    spark: SparkSession, sf_dir: str, n_cells: int | None = None
-) -> DataFrame:
-    # n_cells=cells_for(catalog_rowcount) is the production path; the
-    # registered query leaves it None → pinned K_CELLS for the oracle.
-    k = n_cells or K_CELLS
-    b = cells(spark, sf_dir, n_cells)
-    emb = load_table(spark, sf_dir, "embeddings")
-    # one-parse glue (r13): selectExpr/filter text instead of ~60 py4j
-    # Column calls per body; identical expressions.
-    q = emb.filter(f"vec_id < {N_QUERIES}").selectExpr(
-        "vec_id AS q_id",
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    q = query_side(
+        load_table(spark, sf_dir, "embeddings"),
         "embedding AS q_emb",
-        f"explode({ss_probe_cells('embedding', k)}) AS cell",
+        f"explode({ss_probe_cells('embedding')}) AS cell",
     )
-    scored = (
-        b.join(F.broadcast(q), "cell")
-        .filter("vec_id != q_id")
-        .selectExpr(
-            "q_id",
-            "vec_id AS neighbor_id",
-            f"{ss_micros(ss_cosine('q_emb', 'embedding'))} AS cosine_e6",
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(f"rk <= {TOP_K}")
-        .select("q_id", "neighbor_id", "cosine_e6", "rk")
-    )
+    return cosine_topk(cells(spark, sf_dir), q, "cell")
 
 
 # --------------------------------------------------------------------------
@@ -318,9 +295,9 @@ def _ss_arr_int(vals: Sequence[int]) -> str:
 
 
 def _ss_enc_int(v: str, cents: Sequence[Sequence[int]]) -> str:
-    """min over centroids of BIGINT encoding dist²·k + cell_id, where v
-    is an already-bound array<bigint>. dist² ≤ 64·(2e6)² ≈ 2.6e14, ×k
-    stays far inside BIGINT (ANSI-safe)."""
+    """array of BIGINT encodings dist²·k + cell_id, one per centroid,
+    where v is an already-bound array<bigint>. dist² ≤ 64·(2e6)² ≈
+    2.6e14, ×k stays far inside BIGINT (ANSI-safe)."""
     k = len(cents)
     encs = ", ".join(
         f"aggregate(zip_with({v}, {_ss_arr_int(c)}, "
@@ -328,15 +305,17 @@ def _ss_enc_int(v: str, cents: Sequence[Sequence[int]]) -> str:
         f"(acc, t) -> acc + t) * {k} + {i}"
         for i, c in enumerate(cents)
     )
-    return f"array_min(array({encs}))"
+    return f"array({encs})"
 
 
-def _ss_bound_enc(e6: str, cents: Sequence[Sequence[int]]) -> str:
-    """Bind e6 through a 1-element lambda so the 64-element array is
-    evaluated once, not once per centroid fold (CollapseProject)."""
+def _ss_bound_enc(e6: str, cents: Sequence[Sequence[int]], agg: str) -> str:
+    """``agg`` (array_min: the cell; array_sort: the probe order) of the
+    integer encodings. e6 is bound through a 1-element lambda so the
+    64-element array is evaluated once, not once per centroid fold
+    (CollapseProject)."""
     return (
         f"element_at(transform(array({e6}), "
-        f"v -> {_ss_enc_int('v', cents)}), 1)"
+        f"v -> {agg}({_ss_enc_int('v', cents)})), 1)"
     )
 
 
@@ -366,7 +345,9 @@ def lloyd_kmeans(
     dim = len(cents[0])
     try:
         for _ in range(iters):
-            cell = F.expr(f"CAST({_ss_bound_enc('e6', cents)} % {k} AS INT)")
+            cell = F.expr(
+                f"CAST({_ss_bound_enc('e6', cents, 'array_min')} % {k} AS INT)"
+            )
             # one-parse agg list (r13): the per-dim F.sum/element_at
             # tower cost ~320 py4j round-trips per iteration
             partials = (
@@ -482,53 +463,15 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cents = lloyd_kmeans(emb)
     k = len(cents)
-    e6_txt = _ss_emb_e6("embedding")
-    assigned = emb.select(
+    e6 = _ss_emb_e6("embedding")
+    assigned = emb.selectExpr(
         "vec_id",
         "embedding",
-        F.expr(f"CAST({_ss_bound_enc(e6_txt, cents)} % {k} AS INT)").alias(
-            "cell"
-        ),
+        f"CAST({_ss_bound_enc(e6, cents, 'array_min')} % {k} AS INT) AS cell",
     )
-    sorted_enc_txt = (
-        f"element_at(transform(array({e6_txt}), "
-        f"v -> array_sort(array("
-        + ", ".join(
-            f"aggregate(zip_with(v, {_ss_arr_int(c)}, "
-            f"(x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
-            f"(acc, t) -> acc + t) * {k} + {i}"
-            for i, c in enumerate(cents)
-        )
-        + "))), 1)"
-    )
-    probe_txt = (
-        f"element_at(transform(array({sorted_enc_txt}), s -> array("
-        + ", ".join(
-            f"CAST(element_at(s, {i + 1}) % {k} AS INT)"
-            for i in range(NPROBE)
-        )
-        + ")), 1)"
-    )
-    q = emb.filter(f"vec_id < {N_QUERIES}").selectExpr(
-        "vec_id AS q_id",
-        "embedding AS q_emb",
-        f"explode({probe_txt}) AS cell",
-    )
-    scored = (
-        assigned.join(F.broadcast(q), "cell")
-        .filter("vec_id != q_id")
-        .selectExpr(
-            "q_id",
-            "vec_id AS neighbor_id",
-            f"{ss_micros(ss_cosine('q_emb', 'embedding'))} AS cosine_e6",
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(f"rk <= {TOP_K}")
-        .select("q_id", "neighbor_id", "cosine_e6", "rk")
-    )
+    probe = _ss_probe_tail(_ss_bound_enc(e6, cents, "array_sort"), k)
+    q = query_side(emb, "embedding AS q_emb", f"explode({probe}) AS cell")
+    return cosine_topk(assigned, q, "cell")
 
 
 def kmeans_cells(
@@ -607,55 +550,20 @@ def ann_ivf_ml_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, model = kmeans_cells(emb)
     # model is None only for degenerate (<2 row) corpora: everything sat
-    # in cell 0, so one zero-vector "center" routes every probe there
+    # in cell 0, so one zero-vector "center" routes every probe there.
+    # A guarded tiny fit can return fewer than NPROBE centers; the probe
+    # clamps to the centers it has.
     centers = (
         [tuple(float(x) for x in c) for c in model.clusterCenters()]
         if model is not None
         else [tuple(0.0 for _ in range(DIM))]
     )
-
-    def probe_cells(e: str) -> Column:
-        """NPROBE nearest learned cells by the same exact-integer argmin
-        encoding as the fixed-centroid path (one-parse F.expr text)."""
-        k = len(centers)
-        encs = ", ".join(
-            f"{ss_micros(_ss_l2sq('v', c))} * {k} + {i}"
-            for i, c in enumerate(centers)
-        )
-        bound = (
-            f"element_at(transform(array({ss_to_double(e)}), "
-            f"v -> array_sort(array({encs}))), 1)"
-        )
-        probes = ", ".join(
-            f"CAST(element_at(s, {i + 1}) % {k} AS INT)"
-            # clamp: a guarded tiny fit can return < NPROBE centers,
-            # and element_at past the end raises
-            for i in range(min(NPROBE, k))
-        )
-        return F.expr(
-            f"element_at(transform(array({bound}), s -> array({probes})), 1)"
-        )
-
-    q = emb.filter(f"vec_id < {N_QUERIES}").select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.explode(probe_cells("embedding")).alias("cell"),
+    q = query_side(
+        emb,
+        "embedding AS q_emb",
+        f"explode({ss_probe_cells_from('embedding', centers)}) AS cell",
     )
-    scored = (
-        assigned.join(F.broadcast(q), "cell")
-        .filter("vec_id != q_id")
-        .selectExpr(
-            "q_id",
-            "vec_id AS neighbor_id",
-            f"{ss_micros(ss_cosine('q_emb', 'embedding'))} AS cosine_e6",
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(f"rk <= {TOP_K}")
-        .select("q_id", "neighbor_id", "cosine_e6", "rk")
-    )
+    return cosine_topk(assigned, q, "cell")
 
 
 # --------------------------------------------------------------------------
@@ -788,39 +696,17 @@ EXPORTED_CENTROIDS: tuple[tuple[float, ...], ...] = (
 )
 def ann_ivf_export_centroids_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    b = emb.select(
+    b = emb.selectExpr(
         "vec_id",
         "embedding",
-        F.expr(ss_cell_from("embedding", EXPORTED_CENTROIDS)).alias("cell"),
+        f"{ss_cell_from('embedding', EXPORTED_CENTROIDS)} AS cell",
     )
-    probe_txt = (
-        f"array_sort({_ss_enc_array_from('embedding', EXPORTED_CENTROIDS)})"
-    )
-    probe_parts = ", ".join(
-        f"CAST(element_at(s, {i + 1}) % {len(EXPORTED_CENTROIDS)} AS INT)"
-        for i in range(NPROBE)
-    )
-    q = emb.filter(f"vec_id < {N_QUERIES}").selectExpr(
-        "vec_id AS q_id",
+    q = query_side(
+        emb,
         "embedding AS q_emb",
-        f"explode(element_at(transform(array({probe_txt}), "
-        f"s -> array({probe_parts})), 1)) AS cell",
+        f"explode({ss_probe_cells_from('embedding', EXPORTED_CENTROIDS)}) AS cell",
     )
-    scored = (
-        b.join(F.broadcast(q), "cell")
-        .filter("vec_id != q_id")
-        .selectExpr(
-            "q_id",
-            "vec_id AS neighbor_id",
-            f"{ss_micros(ss_cosine('q_emb', 'embedding'))} AS cosine_e6",
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(f"rk <= {TOP_K}")
-        .select("q_id", "neighbor_id", "cosine_e6", "rk")
-    )
+    return cosine_topk(b, q, "cell")
 
 
 def _install_export_oracle() -> None:

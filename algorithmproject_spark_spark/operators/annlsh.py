@@ -7,7 +7,8 @@ within buckets — an equi-join Catalyst shuffles on the bucket key, so
 candidate generation is linear and AQE handles bucket skew. Recall
 depends on how clustered the corpus is; the query contract ("top-k
 within probed buckets", "pairs within a bucket above threshold") is
-deterministic and oracle-checked either way.
+deterministic and oracle-checked either way. Ranking inside the probed
+bucket is the shared exact rerank of operators/anncore.py.
 
 Hyperplanes are FIXED literals from a seeded PRNG: both engines parse
 the identical decimal literals to identical doubles, and dot products
@@ -20,7 +21,7 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
@@ -30,13 +31,17 @@ from algorithmproject_spark_spark.functions.vectors import (
     ss_cosine,
     ss_to_double,
 )
+from algorithmproject_spark_spark.operators.anncore import (
+    N_QUERIES,
+    TOP_K,
+    cosine_topk,
+    query_side,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
 N_PLANES = 6  # 64 buckets
 DIM = EMB_DIM
-N_QUERIES = 5
-TOP_K = 3
 NEAR_DUP_E6 = 400_000  # cosine ≥ 0.40
 
 _rng = random.Random(7)
@@ -129,24 +134,7 @@ def ann_lsh_bucket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = bucketed(spark, sf_dir)
-    q = b.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), "bucket"
-    )
-    scored = (
-        b.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(ss_micros(ss_cosine("q_emb", "embedding"))).alias("cosine_e6"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "neighbor_id", "cosine_e6", "rk")
-    )
+    return cosine_topk(b, query_side(b, "embedding AS q_emb", "bucket"), "bucket")
 
 
 # --------------------------------------------------------------------------

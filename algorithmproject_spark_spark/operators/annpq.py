@@ -27,14 +27,16 @@ Exactness: codebooks are seeded fixed literals (both engines parse the
 same decimal text), subspace distances are sequential folds scaled to
 BIGINT micros, and the argmin uses the dist·K + code integer encoding —
 bit-exact cross-engine, so all three queries are value-checked, not
-rows-only (same discipline as operators/annivf.py).
+rows-only (same discipline as operators/annivf.py). The query side,
+top-k and recall come from the shared ANN core (operators/anncore.py);
+this module owns only the codes and the ADC candidate scores.
 """
 
 from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
@@ -44,6 +46,14 @@ from algorithmproject_spark_spark.functions.vectors import (
     ss_l2sq,
     ss_to_double,
 )
+from algorithmproject_spark_spark.operators.anncore import (
+    N_QUERIES,
+    TOP_K,
+    candidate_pairs,
+    query_side,
+    recall_at_k,
+    topk,
+)
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -51,8 +61,6 @@ DIM = EMB_DIM
 M_SUB = 8  # subspaces
 SUB_DIM = DIM // M_SUB
 K_PQ = 16  # codes per subspace → 4-bit codes, 32-bit packed vector
-N_QUERIES = 5
-TOP_K = 3
 
 _pq_rng = random.Random(17)
 CODEBOOKS: tuple[tuple[tuple[float, ...], ...], ...] = tuple(
@@ -118,6 +126,15 @@ def ss_d2(emb: str) -> str:
         f"element_at(transform(array({ss_to_double(emb)}), "
         f"v -> {_ss_dists_2d('v')}), 1)"
     )
+
+
+def adc_lookup_table(emb: DataFrame) -> DataFrame:
+    """(q_id, j, code, d): the per-query ADC lookup table, 128 rows per
+    query — the exact micros distance from each query subvector to each
+    codebook entry. Query-set sized, so always broadcast."""
+    return query_side(
+        emb, f"posexplode({ss_d2('embedding')}) AS (j, dj)"
+    ).selectExpr("q_id", "j", "posexplode(dj) AS (code, d)")
 
 
 def ss_pq_code_array(emb: str) -> str:
@@ -319,24 +336,12 @@ def _sql_codes_rows() -> str:
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     codes = pq_codes_exploded(emb.select("vec_id", "embedding"))
-    d2 = F.expr(ss_d2("embedding"))
-    qtab = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.posexplode(d2).alias("j", "dj"))
-        .select("q_id", "j", F.posexplode("dj").alias("code", "d"))
-    )
     adc = (
-        codes.join(F.broadcast(qtab), ["j", "code"])
-        .filter(F.col("vec_id") != F.col("q_id"))
+        candidate_pairs(codes, adc_lookup_table(emb), ["j", "code"])
         .groupBy("q_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d").alias("adc_e6"))
     )
-    w = W.partitionBy("q_id").orderBy(F.asc("adc_e6"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "neighbor_id", "adc_e6", "rk")
-    )
+    return topk(adc, "adc_e6")
 
 
 @register(
@@ -382,35 +387,13 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pq = ann_pq_adc_topk(spark, sf_dir).select(
-        "q_id", F.col("neighbor_id").alias("pq_neighbor")
+    q = query_side(emb, "embedding AS q_emb")
+    l2 = emb.join(F.broadcast(q), emb.vec_id != F.col("q_id")).selectExpr(
+        "q_id",
+        "vec_id AS neighbor_id",
+        f"{ss_micros(ss_l2sq('q_emb', 'embedding'))} AS l2_e6",
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        emb.join(F.broadcast(q), emb.vec_id != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(ss_micros(ss_l2sq("q_emb", "embedding"))).alias("l2_e6"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.asc("l2_e6"), F.asc("neighbor_id"))
-    bf = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "neighbor_id")
-    )
-    hit = bf.join(
-        pq,
-        (bf.q_id == pq.q_id) & (bf.neighbor_id == pq.pq_neighbor),
-        "left",
-    ).select(bf.q_id, pq.pq_neighbor)
-    return hit.groupBy("q_id").agg(
-        F.count("pq_neighbor").alias("n_hits"),
-        F.count(F.lit(1)).alias("k"),
-    )
+    return recall_at_k(ann_pq_adc_topk(spark, sf_dir), topk(l2, "l2_e6"), "pq")
 
 
 # --------------------------------------------------------------------------
@@ -421,10 +404,11 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # only, never a full embedding.
 # --------------------------------------------------------------------------
 from algorithmproject_spark_spark.operators.annivf import (  # noqa: E402
+    CENTROIDS as _IVF_CENTROIDS,
     cells as _ivf_cells,
     ss_probe_cells as _ivf_ss_probe_cells,
     sql_cell as _sql_ivf_cell,
-    sql_probe_cells as _sql_ivf_probe_cells,
+    sql_probe_cells_from as _sql_ivf_probe_cells_from,
 )
 
 
@@ -461,7 +445,7 @@ from algorithmproject_spark_spark.operators.annivf import (  # noqa: E402
         cell="__CELL__", probe="__PROBE__", codes="__CODES__", qtab="__QTAB__"
     )
     .replace("__CELL__", _sql_ivf_cell("embedding"))
-    .replace("__PROBE__", _sql_ivf_probe_cells("embedding"))
+    .replace("__PROBE__", _sql_ivf_probe_cells_from("embedding", _IVF_CENTROIDS))
     .replace("__CODES__", _sql_codes_rows())
     .replace("__QTAB__", _sql_qtab()),
     doc="IVF-PQ (the FAISS-style production composition): coarse cells "
@@ -471,32 +455,15 @@ from algorithmproject_spark_spark.operators.annivf import (  # noqa: E402
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    b = _ivf_cells(spark, sf_dir).select("vec_id", "cell")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.explode(F.expr(_ivf_ss_probe_cells("embedding"))).alias("cell"),
-    )
-    cand = (
-        b.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-    )
+    q = query_side(emb, f"explode({_ivf_ss_probe_cells('embedding')}) AS cell")
+    cand = candidate_pairs(
+        _ivf_cells(spark, sf_dir).select("vec_id", "cell"), q, "cell"
+    ).select("q_id", "vec_id")
     codes = pq_codes_exploded(emb.select("vec_id", "embedding"))
-    d2 = F.expr(ss_d2("embedding"))
-    qtab = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.posexplode(d2).alias("j", "dj"))
-        .select("q_id", "j", F.posexplode("dj").alias("code", "d"))
-    )
     adc = (
         cand.join(codes, "vec_id")
-        .join(F.broadcast(qtab), ["q_id", "j", "code"])
+        .join(F.broadcast(adc_lookup_table(emb)), ["q_id", "j", "code"])
         .groupBy("q_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d").alias("adc_e6"))
     )
-    w = W.partitionBy("q_id").orderBy(F.asc("adc_e6"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "neighbor_id", "adc_e6", "rk")
-    )
+    return topk(adc, "adc_e6")

@@ -34,7 +34,7 @@ beyond-reference storage-layout operator.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -47,19 +47,10 @@ _SPREAD = (
 )
 
 
-def spread_bits16(col: Column) -> Column:
+def ss_spread_bits16(expr: str) -> str:
     """Spread a 16-bit value's bits to the even positions of a 32-bit
     word (Morton interleave half): b15..b0 → b15 at bit 30, …, b0 at
     bit 0. Pure shift/mask ladder — codegen'd, exact, portable."""
-    x = col.bitwiseAND(F.lit(0xFFFF))
-    for shift, mask in _SPREAD:
-        x = x.bitwiseOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
-    return x
-
-
-def ss_spread_bits16(expr: str) -> str:
-    """Spark-SQL text twin of :func:`spread_bits16` (r13 one-parse;
-    shiftleft() is the function the Column ladder calls)."""
     x = f"(({expr}) & 65535)"
     for shift, mask in _SPREAD:
         x = f"(({x} | shiftleft({x}, {shift})) & {mask})"
@@ -67,28 +58,17 @@ def ss_spread_bits16(expr: str) -> str:
 
 
 def ss_zvalue16(a_expr: str, b_expr: str) -> str:
+    """32-bit Morton code of two 16-bit ranks (``a`` gets the even
+    bits, ``b`` the odd)."""
     return f"({ss_spread_bits16(a_expr)} | shiftleft({ss_spread_bits16(b_expr)}, 1))"
 
 
-def ss_rank16(expr: str, vmin: str, vmax: str) -> str:
-    return (
-        f"CASE WHEN ({vmax} - {vmin}) <= 0 THEN CAST(0 AS BIGINT) "
-        f"ELSE (({expr} - {vmin}) * 65535) div ({vmax} - {vmin}) END"
-    )
-
-
 def sql_spread_bits16(expr: str) -> str:
-    """DuckDB twin of :func:`spread_bits16` (same ladder)."""
+    """DuckDB twin of :func:`ss_spread_bits16` (same ladder)."""
     x = f"(({expr}) & 65535)"
     for shift, mask in _SPREAD:
         x = f"(({x} | ({x} << {shift})) & {mask})"
     return x
-
-
-def zvalue16(a: Column, b: Column) -> Column:
-    """32-bit Morton code of two 16-bit ranks (``a`` gets the even
-    bits, ``b`` the odd)."""
-    return spread_bits16(a).bitwiseOR(F.shiftleft(spread_bits16(b), 1))
 
 
 def sql_zvalue16(a_expr: str, b_expr: str) -> str:
@@ -139,9 +119,10 @@ def write_zordered(
         F.min(a_col).alias("a_min"), F.max(a_col).alias("a_max"),
         F.min(b_col).alias("b_min"), F.max(b_col).alias("b_max"),
     )
-    z = zvalue16(
-        F.expr(ss_rank16(a_col, "a_min", "a_max")),
-        F.expr(ss_rank16(b_col, "b_min", "b_max")),
+    z = F.expr(
+        ss_zvalue16(
+            ss_rank16(a_col, "a_min", "a_max"), ss_rank16(b_col, "b_min", "b_max")
+        )
     )
     (
         df.crossJoin(F.broadcast(mm))

@@ -1,5 +1,7 @@
-"""Binary (sign-quantized) embedding ANN — the 5th ANN flavor, the
-memory-extreme end of the quantization ladder next to int8 and PQ.
+"""Binary (sign-quantized) embedding ANN — the memory-extreme end of
+the quantization ladder next to int8 and PQ. Like every flavor of the
+ANN family it owns only candidate scoring (Hamming over sign codes);
+the query side, top-k and recall come from ``operators/anncore.py``.
 
 Sign-quantizing a float embedding to one bit per dimension (bit d set
 iff v[d] > 0) compresses a 64-dim float vector from 256 B to 8 B —
@@ -19,18 +21,24 @@ approximation ships with its own oracle-checked recall query against
 exact float cosine, not a claim.
 
 North-star extension (no reference analogue; nearest is mllib vector
-handling, ``nlp/PrepData.scala:60``), mirroring similarity.py's
-brute-force contract: query set = vec_id < N_QUERIES, deterministic
-(distance, neighbor_id) ranking.
+handling, ``nlp/PrepData.scala:60``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
 from algorithmproject_spark_spark.functions.vectors import EMB_DIM
-from algorithmproject_spark_spark.queries.similarity import N_QUERIES, TOP_K
+from algorithmproject_spark_spark.operators.anncore import (
+    N_QUERIES,
+    TOP_K,
+    candidate_pairs,
+    query_side,
+    recall_at_k,
+    topk,
+)
+from algorithmproject_spark_spark.queries.similarity import knn_bruteforce_cosine
 from algorithmproject_spark_spark.registry import REGISTRY, register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
@@ -123,23 +131,13 @@ _BIN_TOPK_SQL = f"""
 )
 def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = binary_codes(spark, sf_dir)
-    q = c.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("b_lo").alias("q_lo"),
-        F.col("b_hi").alias("q_hi"),
+    q = query_side(c, "b_lo AS q_lo", "b_hi AS q_hi")
+    scored = candidate_pairs(c, q).selectExpr(
+        "q_id",
+        "vec_id AS neighbor_id",
+        "CAST(bit_count(q_lo ^ b_lo) + bit_count(q_hi ^ b_hi) AS BIGINT) AS hamming",
     )
-    ham = F.expr("bit_count(q_lo ^ b_lo) + bit_count(q_hi ^ b_hi)").cast("long")
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), ham.alias("hamming"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "neighbor_id", "hamming", "rk")
-    )
+    return topk(scored, "hamming")
 
 
 _BF_SQL = REGISTRY["knn_bruteforce_cosine"].oracle
@@ -164,18 +162,8 @@ _BF_SQL = REGISTRY["knn_bruteforce_cosine"].oracle
     ),
 )
 def ann_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bin_tk = ann_binary_hamming_topk(spark, sf_dir).select(
-        "q_id", F.col("neighbor_id").alias("bin_neighbor")
-    )
-    bf = REGISTRY["knn_bruteforce_cosine"].fn(spark, sf_dir).select(
-        "q_id", "neighbor_id"
-    )
-    hit = bf.join(
-        bin_tk,
-        (bf.q_id == bin_tk.q_id) & (bf.neighbor_id == bin_tk.bin_neighbor),
-        "left",
-    ).select(bf.q_id, bin_tk.bin_neighbor)
-    return hit.groupBy("q_id").agg(
-        F.count("bin_neighbor").alias("n_hits"),
-        F.count(F.lit(1)).alias("k"),
+    return recall_at_k(
+        ann_binary_hamming_topk(spark, sf_dir),
+        knn_bruteforce_cosine(spark, sf_dir),
+        "bin",
     )

@@ -2,43 +2,39 @@
 exact brute force.
 
 An approximate-nearest-neighbor path you can't measure is a liability
-at 100 TB: this query joins the LSH top-k against the exact cosine
-top-k per query vector and reports hits-of-k, making recall a
-first-class, oracle-checked output of the engine rather than a claim.
-The DuckDB twin nests the two already-registered oracle derivations as
-CTEs, so both sides of the comparison are independently re-derived.
+at 100 TB: the recall queries join an approximate top-k against the
+exact cosine top-k per query vector (``anncore.recall_at_k``) and
+report hits-of-k, making recall a first-class, oracle-checked output of
+the engine rather than a claim. The DuckDB twins nest the two
+already-registered oracle derivations as CTEs, so both sides of the
+comparison are independently re-derived. ``ann_pq_recall`` and
+``ann_binary_recall`` live beside their flavors.
+
+No candidate list is cached: every consumer here references each list
+exactly once, and caching a single-reference relation is pure
+materialization plus an optimizer barrier (it regressed
+``ann_rank_metrics`` 6.25→10.57 s at sf1, VERDICT r11 #2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window as W
 
-from algorithmproject_spark_spark.cacheutil import tracked_cache
-from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_micros
+from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_floordiv
+from algorithmproject_spark_spark.functions.vectors import sql_cosine
+from algorithmproject_spark_spark.operators.anncore import (
+    N_QUERIES,
+    TOP_K,
+    cosine_topk,
+    query_side,
+    recall_at_k,
+)
+from algorithmproject_spark_spark.operators.annivf import ann_ivf_topk
+from algorithmproject_spark_spark.operators.annlsh import ann_lsh_topk
+from algorithmproject_spark_spark.operators.core import topk_per_group
+from algorithmproject_spark_spark.queries.similarity import knn_bruteforce_cosine
 from algorithmproject_spark_spark.registry import REGISTRY, register
-
-
-def _retriever(
-    spark: SparkSession, sf_dir: str, name: str, cache: bool = False
-) -> DataFrame:
-    """One ANN candidate list (``ann_lsh_topk`` / ``ann_ivf_topk`` /
-    ``knn_bruteforce_cosine``), UNCACHED by default (VERDICT r11 #2).
-
-    Round 11 tracked-cached every list here on the theory that
-    multi-reference plans re-run the retrievers; measurement said
-    otherwise — after the rank-metric join flip, every consumer in this
-    module references each list exactly ONCE, and caching a
-    single-reference relation is pure materialization overhead plus an
-    optimizer barrier: it regressed ``ann_rank_metrics`` 6.25→10.57 s
-    at sf1, and the apparent ``ann_rrf_fusion`` win (21.7→3.1 s) was a
-    contention artifact of the round-10 recording, not the cache.
-    ``cache=True`` stays available for a future consumer whose plan
-    genuinely references a list at several sites; the cached relation
-    is top-k-per-query sized (N_QUERIES × TOP_K rows), always
-    executor-memory-trivial."""
-    df = REGISTRY[name].fn(spark, sf_dir)
-    return tracked_cache(df) if cache else df
+from algorithmproject_spark_spark.sources.catalog import load_table
 
 _LSH_SQL = REGISTRY["ann_lsh_topk"].oracle
 _BF_SQL = REGISTRY["knn_bruteforce_cosine"].oracle
@@ -61,20 +57,8 @@ _BF_SQL = REGISTRY["knn_bruteforce_cosine"].oracle
     "oracle-checked quality metric",
 )
 def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lsh = _retriever(spark, sf_dir, "ann_lsh_topk").select(
-        "q_id", F.col("neighbor_id").alias("lsh_neighbor")
-    )
-    bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
-        "q_id", "neighbor_id"
-    )
-    hit = bf.join(
-        lsh,
-        (bf.q_id == lsh.q_id) & (bf.neighbor_id == lsh.lsh_neighbor),
-        "left",
-    ).select(bf.q_id, lsh.lsh_neighbor)
-    return hit.groupBy("q_id").agg(
-        F.count("lsh_neighbor").alias("n_hits"),
-        F.count(F.lit(1)).alias("k"),
+    return recall_at_k(
+        ann_lsh_topk(spark, sf_dir), knn_bruteforce_cosine(spark, sf_dir), "lsh"
     )
 
 
@@ -97,37 +81,19 @@ _IVF_SQL = REGISTRY["ann_ivf_topk"].oracle
     "query vector",
 )
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ivf = _retriever(spark, sf_dir, "ann_ivf_topk").select(
-        "q_id", F.col("neighbor_id").alias("ivf_neighbor")
-    )
-    bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
-        "q_id", "neighbor_id"
-    )
-    hit = bf.join(
-        ivf,
-        (bf.q_id == ivf.q_id) & (bf.neighbor_id == ivf.ivf_neighbor),
-        "left",
-    ).select(bf.q_id, ivf.ivf_neighbor)
-    return hit.groupBy("q_id").agg(
-        F.count("ivf_neighbor").alias("n_hits"),
-        F.count(F.lit(1)).alias("k"),
+    return recall_at_k(
+        ann_ivf_topk(spark, sf_dir), knn_bruteforce_cosine(spark, sf_dir), "ivf"
     )
 
 
-def _approx_union(
-    spark: SparkSession, sf_dir: str, cache: bool = False
-) -> DataFrame:
+def _approx_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both approximate rankings stacked with a method tag — the shape
-    every rank metric below consumes (and the RRF fusion input).
-    ``cache`` is forwarded per retriever (see :func:`_retriever` for
-    why it defaults off)."""
-    lsh = (
-        _retriever(spark, sf_dir, "ann_lsh_topk", cache=cache)
-        .select(F.lit("lsh").alias("method"), "q_id", "neighbor_id", "rk")
+    every rank metric below consumes (and the RRF fusion input)."""
+    lsh = ann_lsh_topk(spark, sf_dir).select(
+        F.lit("lsh").alias("method"), "q_id", "neighbor_id", "rk"
     )
-    ivf = (
-        _retriever(spark, sf_dir, "ann_ivf_topk", cache=cache)
-        .select(F.lit("ivf").alias("method"), "q_id", "neighbor_id", "rk")
+    ivf = ann_ivf_topk(spark, sf_dir).select(
+        F.lit("ivf").alias("method"), "q_id", "neighbor_id", "rk"
     )
     return lsh.unionAll(ivf)
 
@@ -202,7 +168,7 @@ def ann_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose independent subtrees overlap across cores.
     """
     approx = _approx_union(spark, sf_dir).withColumnRenamed("rk", "a_rk")
-    bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
+    bf = knn_bruteforce_cosine(spark, sf_dir).select(
         "q_id", "neighbor_id", F.col("rk").alias("bf_rk")
     )
     joined = approx.join(bf, ["q_id", "neighbor_id"], "left")
@@ -279,14 +245,13 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pts").cast("long").alias("rrf_e6"),
         F.count(F.lit(1)).cast("long").alias("n_lists"),
     )
-    w = W.partitionBy("q_id").orderBy(
-        F.desc("rrf_e6"), F.desc("n_lists"), F.asc("neighbor_id")
-    )
-    return (
-        fused.withColumn("frk", F.row_number().over(w))
-        .filter(F.col("frk") <= 3)
-        .select("q_id", "neighbor_id", "rrf_e6", "n_lists")
-    )
+    return topk_per_group(
+        fused,
+        "q_id",
+        [F.desc("rrf_e6"), F.desc("n_lists"), F.asc("neighbor_id")],
+        TOP_K,
+        rank_col="frk",
+    ).drop("frk")
 
 
 # --------------------------------------------------------------------------
@@ -299,13 +264,6 @@ MATRYOSHKA_DIMS = 8
 
 
 def _sql_trunc_topk() -> str:
-    from algorithmproject_spark_spark.functions.numeric import sql_micros
-    from algorithmproject_spark_spark.functions.vectors import sql_cosine
-    from algorithmproject_spark_spark.queries.similarity import (
-        N_QUERIES,
-        TOP_K,
-    )
-
     d = MATRYOSHKA_DIMS
     return f"""
     SELECT q_id, neighbor_id, rk FROM (
@@ -325,77 +283,28 @@ def _sql_trunc_topk() -> str:
     """
 
 
-def _install_matryoshka() -> None:
-    from algorithmproject_spark_spark.functions.numeric import ss_micros
-    from algorithmproject_spark_spark.functions.vectors import ss_cosine
-    from algorithmproject_spark_spark.queries.similarity import (
-        N_QUERIES,
-        TOP_K,
-    )
-    from algorithmproject_spark_spark.sources.catalog import load_table
-
-    bf_sql = REGISTRY["knn_bruteforce_cosine"].oracle
-
-    @register(
-        "ann_matryoshka_recall",
-        plan=("scalar_cross",),
-        oracle=f"""
+@register(
+    "ann_matryoshka_recall",
+    plan=("scalar_cross",),
+    oracle=f"""
         WITH tr AS ({_sql_trunc_topk()}),
-        bf AS ({bf_sql})
+        bf AS ({_BF_SQL})
         SELECT bf.q_id, count(tr.neighbor_id) AS n_hits, count(*) AS k
         FROM bf LEFT JOIN tr
           ON bf.q_id = tr.q_id AND bf.neighbor_id = tr.neighbor_id
         GROUP BY bf.q_id
         """,
-        doc=(
-            "Matryoshka recall: exact top-k using only the FIRST "
-            f"{MATRYOSHKA_DIMS} embedding dims vs the full-dimension "
-            "exact top-k, per query — measures whether a truncated "
-            "(4x cheaper) index preserves the ranking before shipping "
-            "it; same broadcast-query brute-force shape as the "
-            "baseline, arrays sliced in-plan"
-        ),
-    )
-    def ann_matryoshka_recall(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        d = MATRYOSHKA_DIMS
-        q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("q_id"),
-            F.slice(F.col("embedding"), 1, d).alias("q_emb"),
-        )
-        scored = (
-            emb.crossJoin(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select(
-                "q_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.expr(
-                    ss_micros(ss_cosine("q_emb", f"slice(embedding, 1, {d})"))
-                ).alias("cosine_e6"),
-            )
-        )
-        w = W.partitionBy("q_id").orderBy(
-            F.desc("cosine_e6"), F.asc("neighbor_id")
-        )
-        tr = (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= TOP_K)
-            .select("q_id", F.col("neighbor_id").alias("tr_neighbor"))
-        )
-        bf = _retriever(spark, sf_dir, "knn_bruteforce_cosine").select(
-            "q_id", "neighbor_id"
-        )
-        hit = bf.join(
-            tr,
-            (bf.q_id == tr.q_id) & (bf.neighbor_id == tr.tr_neighbor),
-            "left",
-        ).select(bf.q_id, tr.tr_neighbor)
-        return hit.groupBy("q_id").agg(
-            F.count("tr_neighbor").alias("n_hits"),
-            F.count(F.lit(1)).alias("k"),
-        )
-
-
-_install_matryoshka()
+    doc=(
+        "Matryoshka recall: exact top-k using only the FIRST "
+        f"{MATRYOSHKA_DIMS} embedding dims vs the full-dimension "
+        "exact top-k, per query — measures whether a truncated "
+        "(4x cheaper) index preserves the ranking before shipping "
+        "it; same broadcast-query brute-force shape as the "
+        "baseline, arrays sliced in-plan"
+    ),
+)
+def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    sliced = f"slice(embedding, 1, {MATRYOSHKA_DIMS})"
+    tr = cosine_topk(emb, query_side(emb, f"{sliced} AS q_emb"), emb=sliced)
+    return recall_at_k(tr, knn_bruteforce_cosine(spark, sf_dir), "tr")

@@ -4,14 +4,15 @@ reference analogue; nearest is mllib vector handling,
 
 Brute-force cosine top-k is the correctness baseline: query set ×
 corpus via broadcast of the (small) query side, sequential-fold dot
-products (bit-identical cross-engine), deterministic ranking. The
-LSH-bucketed variant (operators/similarity.py) is the 100 TB path —
-same output contract on the probed buckets.
+products (bit-identical cross-engine), deterministic ranking, all from
+the shared ANN core (operators/anncore.py). The LSH and IVF flavors
+(operators/annlsh.py, operators/annivf.py) are the 100 TB paths —
+same output contract on the probed buckets and cells.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.functions.numeric import sql_micros, ss_micros
 from algorithmproject_spark_spark.functions.vectors import (
@@ -20,11 +21,15 @@ from algorithmproject_spark_spark.functions.vectors import (
     ss_norm,
     ss_to_double,
 )
+from algorithmproject_spark_spark.operators.anncore import (
+    N_QUERIES,
+    TOP_K,
+    cosine_topk,
+    query_side,
+)
+from algorithmproject_spark_spark.operators.core import topk_per_group
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
-
-N_QUERIES = 5
-TOP_K = 3
 
 
 @register(
@@ -37,8 +42,6 @@ TOP_K = 3
     doc="L2 norms via sequential fold (bit-identical cross-engine)",
 )
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from algorithmproject_spark_spark.functions.vectors import ss_norm, ss_to_double
-
     emb = load_table(spark, sf_dir, "embeddings")
     norm = ss_norm(ss_to_double("embedding"))
     return emb.select("vec_id", "label", F.expr(ss_micros(norm)).alias("norm_e6"))
@@ -64,27 +67,9 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ANN baseline: brute-force cosine top-k (broadcast query side)",
 )
 def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # no candidate key: every corpus row is a candidate of every query
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        # corpus stays partitioned; only the bounded query set is
-        # broadcast — the shape that scales to a 100 TB corpus.
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(ss_micros(ss_cosine("q_emb", "embedding"))).alias("cosine_e6"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "neighbor_id", "cosine_e6", "rk")
-    )
+    return cosine_topk(emb, query_side(emb, "embedding AS q_emb"))
 
 
 @register(
@@ -187,26 +172,17 @@ def embedding_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-    )
+    q = query_side(emb, "label AS q_label", "embedding AS q_emb")
     scored = (
         emb.crossJoin(F.broadcast(q))
-        .filter(F.col("label") != F.col("q_label"))
-        .select(
+        .filter("label != q_label")
+        .selectExpr(
             "q_id",
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").alias("neg_label"),
-            F.expr(ss_micros(ss_cosine("q_emb", "embedding"))).alias(
-                "cosine_e6"
-            ),
+            "vec_id AS neg_id",
+            "label AS neg_label",
+            f"{ss_micros(ss_cosine('q_emb', 'embedding'))} AS cosine_e6",
         )
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_e6"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "neg_id", "neg_label", "cosine_e6", "rk")
+    return topk_per_group(
+        scored, "q_id", [F.desc("cosine_e6"), F.asc("neg_id")], TOP_K
     )

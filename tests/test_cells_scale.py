@@ -12,6 +12,7 @@ from algorithmproject_spark_spark.operators.annivf import (
     cells_for,
     centroids_for,
     ss_cell,
+    ss_probe_cells,
 )
 
 TARGET = 50
@@ -68,3 +69,12 @@ def test_candidate_volume_stays_linear(spark):
     # adaptive-k measured ≈ 4.4× here; a pinned k=8 would give ~16×
     ratio = sum(s * s for s in big) / sum(s * s for s in small)
     assert ratio < 8.0, ratio
+
+
+def test_probe_clamps_to_the_cells_there_are(spark):
+    # cells_for(n) is 1 for any corpus of <= TARGET_CELL_SIZE vectors;
+    # probing NPROBE > k cells must return the k there are, not raise
+    # INVALID_ARRAY_INDEX_IN_ELEMENT_AT under ANSI
+    df = _synthetic_embeddings(spark, 3)
+    got = df.select(F.expr(ss_probe_cells("embedding", 1)).alias("p")).collect()
+    assert [r.p for r in got] == [[0], [0], [0]]

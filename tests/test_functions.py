@@ -80,7 +80,7 @@ def test_clean_text(spark):
 
 
 def test_tokenize_and_stopwords(spark):
-    assert _one(spark, stopword_count(tokenize(F.lit("the cat the dog")))) == 2
+    assert _one(spark, stopword_count(tokenize("'the cat the dog'"))) == 2
 
 
 def test_vector_ops(spark):

@@ -578,13 +578,13 @@ def test_ratio_e6_equals_unbounded_integer_math(spark, pairs):
 @given(xs=st.lists(st.integers(0, 0xFFFF), min_size=1, max_size=30))
 @SLOW
 def test_spread_bits_is_injective_and_even_positioned(spark, xs):
-    """spread_bits16: bit i of x lands at bit 2i, nothing at odd
+    """ss_spread_bits16: bit i of x lands at bit 2i, nothing at odd
     positions, and the mapping is injective."""
-    from algorithmproject_spark_spark.operators.zorder import spread_bits16
+    from algorithmproject_spark_spark.operators.zorder import ss_spread_bits16
 
     df = spark.createDataFrame([(x,) for x in set(xs)], ["x"])
     out = {r.x: r.s for r in
-           df.select("x", spread_bits16(F.col("x")).alias("s")).collect()}
+           df.select("x", F.expr(ss_spread_bits16("x")).alias("s")).collect()}
     for x, s in out.items():
         assert s == sum(((x >> i) & 1) << (2 * i) for i in range(16))
         assert s & 0xAAAAAAAA == 0  # odd bit positions empty

@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from algorithmproject_spark_spark.operators.zorder import (
     ss_rank16,
-    spread_bits16,
+    ss_spread_bits16,
+    ss_zvalue16,
     write_zordered,
-    zvalue16,
 )
 
 
@@ -21,7 +21,7 @@ def test_spread_bits_matches_reference(spark):
     vals = [0, 1, 2, 3, 0xFF, 0x100, 0xAAAA, 0x5555, 0xFFFF]
     df = spark.createDataFrame([(v,) for v in vals], ["x"])
     out = {r.x: r.s for r in
-           df.select("x", spread_bits16(F.col("x")).alias("s")).collect()}
+           df.select("x", F.expr(ss_spread_bits16("x")).alias("s")).collect()}
     assert out == {v: _spread_ref(v) for v in vals}
 
 
@@ -32,7 +32,7 @@ def test_zvalue_orders_locality(spark):
         [(a, b) for a in range(4) for b in range(4)], ["a", "b"]
     )
     out = {(r.a, r.b): r.z for r in
-           df.select("a", "b", zvalue16(F.col("a"), F.col("b")).alias("z")).collect()}
+           df.select("a", "b", F.expr(ss_zvalue16("a", "b")).alias("z")).collect()}
     for (a, b), z in out.items():
         assert z == _spread_ref(a) | (_spread_ref(b) << 1)
     # the 2x2 block (0..1)x(0..1) occupies z 0..3 — a contiguous run
@@ -68,9 +68,10 @@ def test_write_zordered_files_have_disjoint_z_ranges(spark, tmp_path):
         F.min("user_id").alias("a_min"), F.max("user_id").alias("a_max"),
         F.min("tsec").alias("b_min"), F.max("tsec").alias("b_max"),
     )
-    z = zvalue16(
-        F.expr(ss_rank16("user_id", "a_min", "a_max")),
-        F.expr(ss_rank16("tsec", "b_min", "b_max")),
+    z = F.expr(
+        ss_zvalue16(
+            ss_rank16("user_id", "a_min", "a_max"), ss_rank16("tsec", "b_min", "b_max")
+        )
     )
     # tag the source file BEFORE the broadcast join — input_file_name()
     # refuses multi-source expressions

@@ -1,11 +1,15 @@
-"""Snapshot every registered query's OPTIMIZED logical plan to files.
+"""Snapshot every registered query's OPTIMIZED logical plan and its
+DuckDB oracle SQL to files.
 
 Equivalence gate for the r13 one-parse conversions: converting a
 Column-API tower to SQL text must leave the optimized plan IDENTICAL
 (modulo expression ids, which differ per session). Snapshot before the
 edit, snapshot after, diff the normalized texts — any real semantic
 drift (literal type change, different cast, lost alias) shows up as a
-plan diff long before an oracle run would catch it.
+plan diff long before an oracle run would catch it. Beside each
+``<name>.txt`` plan the tool writes ``<name>.oracle.sql`` (the
+registered oracle string, or ``None``), so one ``diff -r`` of two
+snapshots also proves the reference SQL unchanged.
 
 Usage: python tools/plan_snapshot.py <outdir> [query ...]
 (no queries = whole registry). $SPARK_GRAFT_SF_DIR picks the data
@@ -61,6 +65,8 @@ def main() -> int:
             failed.append(name)
         with open(os.path.join(outdir, f"{name}.txt"), "w", encoding="utf-8") as fh:
             fh.write(normalize(plan))
+        with open(os.path.join(outdir, f"{name}.oracle.sql"), "w", encoding="utf-8") as fh:
+            fh.write(str(REGISTRY[name].oracle))
         release_caches()
         clear_itemset_cache()
         print(name, flush=True)
