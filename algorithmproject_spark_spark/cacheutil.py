@@ -1,20 +1,29 @@
-"""Session-level tracked cache — the release hook for query-built
-cached relations.
+"""Session-level tracked caches and checkpoints — the release hook for
+relations pinned while a query is built.
 
-Query functions cache derived relations that feed multiple consumers
+Query functions pin derived relations that feed multiple consumers
 inside one returned plan (shingle tables, verified-pair relations,
-posting lists). Spark's CacheManager keys entries on the canonicalized
-plan, so repeated builds of the same query hit one entry — but nothing
-ever RELEASES those entries in a long-lived session (bench loops,
+posting lists), and every iterative loop pins its per-round state.
+Spark's CacheManager keys cache entries on the canonicalized plan, so
+repeated builds of the same query hit one entry — but nothing ever
+RELEASES those entries in a long-lived session (bench loops,
 notebooks): storage memory accumulates until the session dies.
 
-:func:`tracked_cache` is a drop-in replacement for ``df.cache()`` that
-records the relation; :func:`release_caches` unpersists everything
+:func:`tracked_cache` is a drop-in replacement for ``df.cache()`` and
+:func:`tracked_local_checkpoint` for ``df.localCheckpoint()``; both
+record what they pin, and :func:`release_caches` unpersists everything
 still bound to a live SparkContext and clears the ledger. Call it
 whenever the consumers of the current batch of queries have
 materialized — after a bench sweep, in test-session teardown, between
-notebook experiments. Unpersisting is safe mid-session: a later query
-that rebuilds the same plan simply re-caches it.
+notebook experiments. Unpersisting a cache is safe mid-session: a later
+query that rebuilds the same plan simply re-caches it.
+
+Checkpoints have one form: a lazy ``localCheckpoint`` whose block set
+is released by the handle read off the checkpointed plan (a
+``LogicalRDD`` over the persisted RDD), so releasing a checkpoint never
+touches another relation's blocks. Every checkpoint goes through this
+module; :func:`scoped_local_checkpoint` is the same form with a
+caller-owned release, for per-micro-batch pins in streams.
 
 itemsets.py keeps its own (session, sf_dir) memo because it shares ONE
 relation across distinct registered queries and must hand back the
@@ -24,24 +33,14 @@ hook (``release_caches`` does not touch it).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
-
-# Serializes the getPersistentRDDs before/after diff windows so two
-# Python threads checkpointing concurrently (e.g. two foreachBatch
-# callbacks in one session) cannot attribute each other's blocks and
-# later free a live stream's checkpoint out from under it (round-9
-# review finding). JVM-side persists from OUTSIDE these helpers during
-# a window are not covered — route checkpoints through cacheutil.
-_CP_LOCK = threading.RLock()
 
 # (DataFrame, SparkContext) pairs awaiting release. Entries bound to
 # stopped contexts are pruned on every append, so session cycles don't
 # accumulate dead references.
 _TRACKED: list = []
 
-# (JavaRDD handle, SparkContext) pairs for localCheckpoint block sets
+# (RDD handle, SparkContext) pairs for localCheckpoint block sets
 # awaiting release (see tracked_local_checkpoint).
 _TRACKED_CP: list = []
 
@@ -69,92 +68,60 @@ def tracked_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` + record the checkpoint blocks
-    for :func:`release_caches`.
+def _local_checkpoint(df: DataFrame):
+    """Lazy ``df.localCheckpoint()`` and the RDD whose blocks it
+    persists: the checkpointed frame's logical plan is a ``LogicalRDD``
+    over exactly that RDD."""
+    out = df.localCheckpoint(False)  # lazy
+    plan = out._jdf.queryExecution().logical()
+    if plan.nodeName() != "LogicalRDD":
+        raise TypeError(
+            f"localCheckpoint produced a {plan.nodeName()} plan, not a "
+            "LogicalRDD; its blocks cannot be located for release"
+        )
+    return out, plan.rdd()
 
-    ``localCheckpoint`` persists the materialized partitions as RDD
-    blocks that ``DataFrame.unpersist`` never reaches — a 256-query
-    sweep in one session accumulates them until the context dies
-    (ADVICE r8). The new block-set is diffed out of
-    ``getPersistentRDDs`` and unpersisted on release. UNLIKE a released
-    cache, a released checkpoint cannot recompute (lineage was
-    truncated), so the returned DataFrame is dead after
-    ``release_caches`` — fine for the query-build pattern, where each
-    build constructs a fresh plan; never hand it to a long-lived
-    consumer.
 
-    ``eager=False`` (r12) truncates the logical plan identically and,
-    with adaptive query execution OFF, defers materialization to the
-    first downstream action. With AQE ON — the session default — the
-    checkpoint RDD is built from ``AdaptiveSparkPlanExec.execute()``,
-    which runs every upstream shuffle stage at BUILD time, so a k-round
-    loop still launches its rounds as serial build-time jobs: measured
-    at sf0.1 on 4 cores (job count from the in-process status store,
-    the same figure as ``perfbench --trace 1``'s ``queries.build_jobs``),
-    ``dedup_cluster_reps`` builds with 23 jobs under AQE and 3 without,
-    ``corpus_pagerank_topk`` with 20 and 3. The ledger still tracks
-    it: ``RDD.persist`` REGISTERS the RDD in
-    ``getPersistentRDDs`` at call time (verified empirically), even
-    though its blocks appear at first compute, so the diff window
-    captures lazy checkpoints exactly like eager ones."""
-    out, handles = _checkpoint_with_handles(df, eager=eager)
+def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Lazy ``df.localCheckpoint()`` + record its block set for
+    :func:`release_caches`.
+
+    The returned plan is truncated to the checkpoint RDD, so a loop
+    that checkpoints its state every round keeps a constant-depth plan
+    that Catalyst analyzes in constant time. ``localCheckpoint`` stores
+    the partitions as RDD blocks that ``DataFrame.unpersist`` never
+    reaches; the ledger frees them on release. UNLIKE a released cache,
+    a released checkpoint cannot recompute (lineage was truncated), so
+    the returned DataFrame is dead after ``release_caches`` — fine for
+    the query-build pattern, where each build constructs a fresh plan;
+    never hand it to a long-lived consumer.
+
+    The checkpoint is lazy: its blocks are written by the first action
+    that reads it, with no extra job of its own. Under adaptive query
+    execution (the session default) creating the checkpoint RDD runs
+    ``AdaptiveSparkPlanExec.execute()``, which materializes every
+    upstream shuffle stage at BUILD time, so a k-round loop still runs
+    its rounds as serial build-time jobs. Measured at sf0.1 on 4 cores
+    (``tools/measure.py``'s ``build_jobs``, the same figure as
+    ``perfbench --trace 1``'s ``queries.build_jobs``):
+    ``bpe_merge_induction`` builds with 7 jobs for 7 checkpoints and
+    ``corpus_pagerank_tol_topk`` with 22."""
+    out, rdd = _local_checkpoint(df)
     sc = df.sparkSession.sparkContext
     _TRACKED_CP[:] = [(r, c) for r, c in _TRACKED_CP if c._jsc is not None]
-    _TRACKED_CP.extend((h, sc) for h in handles)
+    _TRACKED_CP.append((rdd, sc))
     return out
 
 
-def tracked_lazy_local_checkpoint(df: DataFrame) -> DataFrame:
-    """:func:`tracked_local_checkpoint` with ``eager=False`` — a
-    ``DataFrame.transform``-friendly alias for loop bodies."""
-    return tracked_local_checkpoint(df, eager=False)
-
-
-def _persistent_ids(sc) -> tuple:
-    """(java Map handle, set of live persistent RDD ids) in TWO py4j
-    round-trips: iterating ``keySet().toArray()`` costs one trip PER
-    ELEMENT, which a k-round loop over a growing session ledger turns
-    into O(rounds × live RDDs) driver chatter (r13). The java.util.Set
-    toString — "[1, 12, 3]" — carries every id in one reply; format is
-    the JDK's AbstractCollection.toString contract."""
-    live = sc._jsc.getPersistentRDDs()
-    txt = live.keySet().toString()
-    ids = {
-        int(tok)
-        for tok in txt.strip("[]").replace(" ", "").split(",")
-        if tok
-    }
-    return live, ids
-
-
-def _checkpoint_with_handles(df: DataFrame, eager: bool = True):
-    """localCheckpoint + the JavaRDD handles of the blocks it
-    persisted (the shared diff idiom — one implementation for the
-    session ledger and for scoped callers)."""
-    sc = df.sparkSession.sparkContext
-    with _CP_LOCK:
-        _, before = _persistent_ids(sc)
-        out = df.localCheckpoint(eager=eager)
-        live, after = _persistent_ids(sc)
-        handles = [live.get(rdd_id) for rdd_id in sorted(after - before)]
-    return out, handles
-
-
 def scoped_local_checkpoint(df: DataFrame):
-    """Eager localCheckpoint whose blocks the CALLER frees: returns
-    ``(checkpointed_df, release)`` — call ``release()`` once every
-    consumer of the checkpoint has materialized. Not entered in the
-    session ledger, so ``release_caches()`` never touches it: the shape
-    for per-micro-batch pins inside a long-running stream, where the
-    session-level release hook does not fire between batches."""
-    out, handles = _checkpoint_with_handles(df)
-
-    def release() -> None:
-        for h in handles:
-            h.unpersist()
-
-    return out, release
+    """:func:`tracked_local_checkpoint`'s form with a caller-owned
+    release: returns ``(checkpointed_df, release)`` — call ``release()``
+    once every consumer of the checkpoint has materialized. Not entered
+    in the session ledger, so ``release_caches()`` never touches it: the
+    shape for per-micro-batch pins inside a long-running stream, where
+    the session-level release hook does not fire between batches."""
+    out, rdd = _local_checkpoint(df)
+    return out, lambda: rdd.unpersist(False)
 
 
 def release_caches() -> None:
@@ -168,9 +135,9 @@ def release_caches() -> None:
         if sc._jsc is not None:
             df.unpersist()
     _TRACKED.clear()
-    for jrdd, sc in _TRACKED_CP:
+    for rdd, sc in _TRACKED_CP:
         if sc._jsc is not None:
-            jrdd.unpersist()
+            rdd.unpersist(False)
     _TRACKED_CP.clear()
 
 
@@ -180,5 +147,6 @@ def tracked_count() -> int:
 
 
 def checkpoint_count() -> int:
-    """Live tracked checkpoint block-sets (for tests)."""
+    """Live tracked checkpoint block-sets (for tests and
+    ``tools/measure.py``)."""
     return sum(1 for _, sc in _TRACKED_CP if sc._jsc is not None)

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from algorithmproject_spark_spark.cacheutil import tracked_lazy_local_checkpoint
+from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
 MAX_LEVEL = 4
 
@@ -31,10 +31,10 @@ def bfs_levels(edges: DataFrame, max_level: int = MAX_LEVEL) -> DataFrame:
     sym = (
         edges.select("a", "b")
         .unionAll(edges.selectExpr("b AS a", "a AS b"))
-        .transform(tracked_lazy_local_checkpoint)
+        .transform(tracked_local_checkpoint)
     )
     src = sym.agg(F.expr("min(a) AS v"))
-    visited = src.withColumn("level", F.lit(0)).transform(tracked_lazy_local_checkpoint)
+    visited = src.withColumn("level", F.lit(0)).transform(tracked_local_checkpoint)
     frontier = visited.select("v")
     for lvl in range(1, max_level + 1):
         nxt = (
@@ -42,13 +42,12 @@ def bfs_levels(edges: DataFrame, max_level: int = MAX_LEVEL) -> DataFrame:
             .selectExpr("b AS v")
             .distinct()
             .join(visited.select("v"), "v", "left_anti")
-            .transform(tracked_lazy_local_checkpoint)
+            .transform(tracked_local_checkpoint)
         )
-        # visited stays a LAZY union of the already-checkpointed
-        # frontiers (r12): every leaf below it is materialized, so the
-        # plan is a flat ≤max_level-way union — checkpointing the union
-        # itself only added one eager job per round (guide §1.2: fewer
-        # passes; values unchanged).
+        # visited stays a plain union of the already-checkpointed
+        # frontiers: every leaf below it is pinned, so the plan is a
+        # flat ≤max_level-way union, and checkpointing the union would
+        # only store the same rows twice (guide §1.2: fewer passes).
         visited = visited.unionAll(nxt.withColumn("level", F.lit(lvl)))
         frontier = nxt
     return visited

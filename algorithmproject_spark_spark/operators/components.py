@@ -34,10 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from algorithmproject_spark_spark.cacheutil import (
-    tracked_lazy_local_checkpoint,
-    tracked_local_checkpoint,
-)
+from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
 CC_ITERS = 5
 
@@ -59,7 +56,7 @@ def connected_components_min_label(
     edges = (
         pairs.selectExpr(f"{a_col} AS s", f"{b_col} AS d")
         .unionAll(pairs.selectExpr(f"{b_col} AS s", f"{a_col} AS d"))
-        .transform(tracked_lazy_local_checkpoint)
+        .transform(tracked_local_checkpoint)
     )
     labels = edges.selectExpr("s AS v").distinct().selectExpr("v", "v AS lbl")
     for _ in range(iterations):
@@ -76,17 +73,15 @@ def connected_components_min_label(
         pushed = edges.join(labels.withColumnRenamed("v", "s"), "s").selectExpr(
             "d AS v", "lbl"
         )
-        # LAZY checkpoint (r12): plan truncation (the reason to
-        # checkpoint at all) is identical to an eager one. It does NOT
-        # defer the rounds under AQE (the session default): each
-        # round's shuffle stages run at build time — dedup_cluster_reps
-        # builds with 23 Spark jobs at sf0.1 (3 with AQE off), counted
-        # from the status store; see tracked_local_checkpoint.
+        # The checkpoint truncates the plan (the reason to checkpoint
+        # at all). Under AQE (the session default) each round's shuffle
+        # stages still run at build time — dedup_cluster_reps builds
+        # with 22 Spark jobs at sf0.1; see tracked_local_checkpoint.
         labels = (
             pushed.unionAll(labels)
             .groupBy("v")
             .agg(F.expr("min(lbl) AS lbl"))
-            .transform(tracked_lazy_local_checkpoint)
+            .transform(tracked_local_checkpoint)
         )
     return labels
 

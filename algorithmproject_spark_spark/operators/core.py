@@ -105,7 +105,8 @@ def zip_with_global_index(
     # as a non-dense index (gaps; max rn 5178 over 5000 rows), caught
     # by the full-registry oracle sweep at 10× the driver's scale.
     # RDD zipWithIndex never had this hazard (hash lineage, no
-    # sampling); materializing the sorted relation restores its
+    # sampling); the checkpoint is built from one physical plan and its
+    # blocks are written by the counts job, which restores its
     # one-snapshot semantics.
     sdf = (
         df.repartitionByRange(n, *cols)

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from algorithmproject_spark_spark.cacheutil import tracked_lazy_local_checkpoint
+from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
 from algorithmproject_spark_spark.operators.triangles import (
     sql_vertex_degrees,
@@ -59,7 +59,7 @@ def kcore_vertices(
     therefore small — edge set). A graph whose peel depth exceeds
     ``rounds`` fails loudly with a ValueError instead of silently
     returning a non-k-core as a dense-cluster certificate."""
-    e = edges.select("a", "b").transform(tracked_lazy_local_checkpoint)
+    e = edges.select("a", "b").transform(tracked_local_checkpoint)
     for i in range(rounds):
         keep = _degrees(e).filter(f"deg >= {k}").select("v")
         e = e.join(
@@ -68,7 +68,7 @@ def kcore_vertices(
         # cadence knob (VERDICT r10 #7): lineage management only —
         # values identical at any cadence; final round always truncates
         if (i + 1) % checkpoint_every == 0 or i == rounds - 1:
-            e = e.transform(tracked_lazy_local_checkpoint)
+            e = e.transform(tracked_local_checkpoint)
     deg = _degrees(e)
     # min-degree invariant: every vertex of a true k-core has deg >= k
     # in the surviving subgraph; a deg < k survivor means one more peel

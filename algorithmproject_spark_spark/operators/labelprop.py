@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from algorithmproject_spark_spark.cacheutil import tracked_lazy_local_checkpoint
+from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
 LPA_ITERS = 3
 
@@ -47,7 +47,7 @@ def label_propagation(
     edges = (
         pairs.selectExpr(f"{a_col} AS s", f"{b_col} AS d")
         .unionAll(pairs.selectExpr(f"{b_col} AS s", f"{a_col} AS d"))
-        .transform(tracked_lazy_local_checkpoint)
+        .transform(tracked_local_checkpoint)
     )
     labels = edges.selectExpr("s AS v").distinct().selectExpr("v", "v AS lbl")
     for i in range(iterations):
@@ -72,7 +72,7 @@ def label_propagation(
             .selectExpr("v", "t.lbl AS lbl")
         )
         if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            labels = labels.transform(tracked_lazy_local_checkpoint)
+            labels = labels.transform(tracked_local_checkpoint)
     return labels.selectExpr("v", "lbl AS community")
 
 

@@ -24,7 +24,6 @@ from pyspark.sql import Window as W
 
 from algorithmproject_spark_spark.cacheutil import (
     tracked_cache,
-    tracked_lazy_local_checkpoint,
     tracked_local_checkpoint,
 )
 from algorithmproject_spark_spark.functions.text import (
@@ -256,11 +255,10 @@ def corpus_pagerank(
                 "word",
                 f"CAST({base} + c * 17 DIV 20 AS BIGINT) AS rank",
             )
-            # LAZY checkpoint (r12): truncates the plan like an eager
-            # one; under AQE (the session default) each iteration's
-            # stages still run at build time — 20 build jobs at sf0.1
-            # (3 with AQE off), see tracked_local_checkpoint
-            .transform(tracked_lazy_local_checkpoint)
+            # the checkpoint truncates the plan; under AQE (the session
+            # default) each iteration's stages still run at build time
+            # — 20 build jobs at sf0.1, see tracked_local_checkpoint
+            .transform(tracked_local_checkpoint)
         )
     return ranks
 
@@ -375,9 +373,9 @@ def corpus_pagerank_tol(
     # identical — every vertex has exactly one ranks row, so
     # max(prev) recovers its previous rank in the same groupBy), and
     # read the residual with one vocabulary-scale agg over the
-    # checkpointed output. Jobs per round: 2 (checkpoint + resid agg
-    # over in-memory blocks) instead of 3 (checkpoint + join + agg);
-    # exchanges per round drop by the join's two sides.
+    # checkpointed output; that agg is the job that writes the
+    # checkpoint's blocks. Exchanges per round drop by the join's two
+    # sides; the whole build runs 22 Spark jobs at sf0.1 (4 checkpoints).
     for _ in range(max_iters):
         contrib_rows = edges_n.join(
             ranks, edges_n.src == ranks.word

@@ -34,10 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from algorithmproject_spark_spark.cacheutil import (
-    tracked_lazy_local_checkpoint,
-    tracked_local_checkpoint,
-)
+from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -108,12 +105,10 @@ def bpe_learn_merges(
         )
         out = row if out is None else out.unionAll(row)
         if r < rounds:
-            # LAZY (r12): the merged corpus materializes inside the
-            # NEXT round's pair-count job — same passes, one fewer job
-            # per round and no block write+read between merge and count
-            tok = _merge_round(tok, best).transform(
-                tracked_lazy_local_checkpoint
-            )
+            # the merged corpus's blocks are written inside the next
+            # round's pair-count job, with no job of their own: the
+            # build runs 7 Spark jobs for its 7 checkpoints at sf0.1
+            tok = _merge_round(tok, best).transform(tracked_local_checkpoint)
     return out
 
 
@@ -194,8 +189,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = tok0
     for _ in range(BPE_ROUNDS):
         best = _pair_best(tok).transform(tracked_local_checkpoint)
-        # LAZY (r12): see bpe_learn_merges
-        tok = _merge_round(tok, best).transform(tracked_lazy_local_checkpoint)
+        tok = _merge_round(tok, best).transform(tracked_local_checkpoint)
     raw = tok0.select("doc_id", F.size("t").cast("long").alias("n_tokens_raw"))
     enc = tok.select("doc_id", F.size("t").cast("long").alias("n_tokens_bpe"))
     return raw.join(enc, "doc_id").select(

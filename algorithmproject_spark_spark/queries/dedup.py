@@ -1176,8 +1176,9 @@ def excerpt_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the df-capped posting subset: the candidate self-join reads it
     # on BOTH sides and Catalyst does not dedupe the identical explode +
     # rare-df subtrees — same fix ngram_jaccard_index_pairs carries
-    # (r12; cache instead of eager checkpoint so materialization folds
-    # into the one final job)
+    # (a cache, not a checkpoint: under AQE building a checkpoint runs
+    # its upstream shuffle stages at build time; the cache fills inside
+    # the one final job)
     rare_posts = tracked_cache(posts.join(rare, "g"))
     cand = (
         rare_posts.alias("a")

@@ -43,9 +43,7 @@ def golden_records(
     n_chars)`` and ``labels(v, lbl)`` (component labels over the
     duplicate subgraph): ``(cluster, golden_doc, n_members,
     total_chars, max_chars, langs, sources)``."""
-    from algorithmproject_spark_spark.cacheutil import (
-        tracked_lazy_local_checkpoint,
-    )
+    from algorithmproject_spark_spark.cacheutil import tracked_local_checkpoint
 
     # Pin the member relation (r13): the survivor window and the
     # attribute aggregation both consume it, and Catalyst does not
@@ -55,7 +53,7 @@ def golden_records(
     members = (
         labels.selectExpr("v AS doc_id", "lbl AS cluster")
         .join(docs, "doc_id")
-        .transform(tracked_lazy_local_checkpoint)
+        .transform(tracked_local_checkpoint)
     )
     ranked = members.selectExpr(
         "cluster",

@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import (
     tracked_cache,
-    tracked_lazy_local_checkpoint,
     tracked_local_checkpoint,
 )
 from algorithmproject_spark_spark.functions.numeric import ss_floordiv
@@ -257,31 +256,27 @@ def orders_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # once per consumer — doubling per half-step (measured 6.1 s →
         # 1.9 s warm at sf0.1). localCheckpoint also truncates lineage
         # so the loop's plan stays O(1) per iteration (kcore/pagerank
-        # discipline).
-        # LAZY checkpoints (r12): the loop has no per-round action —
-        # the normalize branch's broadcast max and the next half-step
-        # share the persisted blocks at final execution, without one
-        # eager job per half-step.
+        # discipline). The checkpoint writes its blocks in the first
+        # job that reads them; the normalize branch's broadcast max and
+        # the next half-step share them.
         a_raw = (
             edges.join(h, "c")
             .groupBy("p")
             .agg(F.expr("sum(h) AS a"))
-            .transform(tracked_lazy_local_checkpoint)
+            .transform(tracked_local_checkpoint)
         )
         a = _hits_normalize(a_raw, "p", "a")
         if it == HITS_ITERS - 1:
             # the FINAL authorities are this a; the h half-step after
-            # it was never consumed but its tracked_local_checkpoint
-            # EAGERLY ran the join+agg anyway — skipping it drops one
-            # full unused half-step (r12, guide §1.2: don't compute
-            # things you throw away). Values unchanged: a is built
-            # before h would have been.
+            # it would never be consumed, but building its checkpoint
+            # runs its join+agg stages under AQE — so it is not built
+            # (guide §1.2: don't compute things you throw away).
             break
         h_raw = (
             edges.join(a, "p")
             .groupBy("c")
             .agg(F.expr("sum(a) AS h"))
-            .transform(tracked_lazy_local_checkpoint)
+            .transform(tracked_local_checkpoint)
         )
         h = _hits_normalize(h_raw, "c", "h")
     return (
@@ -452,7 +447,7 @@ def customer_item_recs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (baskets cache + two aggs + joins + global top-k) once per union
     # branch — measured 41 Exchanges in the unpinned plan (r12). The
     # checkpoint is TOPK_PAIRS rows, so the pin is O(1).
-    sims = tracked_lazy_local_checkpoint(
+    sims = tracked_local_checkpoint(
         copurchase_cosine_topk(spark, sf_dir).select(
             "part_i", "part_j", "cos2_e6"
         )

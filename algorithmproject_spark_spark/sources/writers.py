@@ -200,82 +200,6 @@ def write_clustered_parquet(
     shaped.sortWithinPartitions(*cluster_by).write.mode(mode).parquet(path)
 
 
-def _morton_interleave(a: F.Column, b: F.Column, bits: int = 16) -> F.Column:
-    """Bit-interleave two `bits`-wide non-negative ints into one Morton
-    (Z-order) key — pure JVM bit arithmetic, whole-stage codegen'd."""
-    # PySpark's Column & / | are BOOLEAN operators, so extract bit i as
-    # shiftright % 2 and combine with + (bit positions are disjoint, so
-    # addition is bit-exact OR).
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(a, i) % 2, 2 * i)
-            + F.shiftleft(F.shiftright(b, i) % 2, 2 * i + 1)
-        )
-    return z
-
-
-def write_zorder_parquet(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-    bits: int = 16,
-) -> None:
-    """Z-order-clustered parquet layout: multi-column data skipping.
-
-    Single-column range clustering (``write_clustered_parquet``) makes
-    row-group stats tight on ONE key; a filter on any other column
-    still reads everything. Z-ordering interleaves the bits of two
-    keys (each min-max scaled to ``bits`` wide) into one Morton code
-    and range-clusters on THAT — locality in the Morton order implies
-    locality in BOTH dimensions, so row-group min/max stats are
-    simultaneously tight on both columns and a predicate on either
-    one (or both) skips most row groups.
-
-    The min/max scaling bounds come from one cheap two-scalar
-    aggregate over the two columns (a driver-bounded 1-row collect —
-    at 100 TB this is a footer-statistics read away, never a full
-    scan cost worth optimizing). The Morton key itself is 2*bits wide
-    static bit arithmetic, fully codegen'd, and is dropped before the
-    write — it exists only to order the data.
-    """
-    row = df.agg(
-        F.min(F.col(col_a).cast("double")).alias("amin"),
-        F.max(F.col(col_a).cast("double")).alias("amax"),
-        F.min(F.col(col_b).cast("double")).alias("bmin"),
-        F.max(F.col(col_b).cast("double")).alias("bmax"),
-    ).collect()[0]
-    top = float((1 << bits) - 1)
-
-    def scaled(c: str, lo: float, hi: float) -> F.Column:
-        span = (hi - lo) or 1.0
-        return F.least(
-            F.lit(int(top)).cast("long"),
-            F.floor(
-                (F.col(c).cast("double") - F.lit(lo)) / F.lit(span) * F.lit(top)
-            ).cast("long"),
-        )
-
-    z = _morton_interleave(
-        scaled(col_a, row["amin"], row["amax"]),
-        scaled(col_b, row["bmin"], row["bmax"]),
-        bits,
-    )
-    shaped = df.withColumn("__z", z)
-    shaped = (
-        shaped.repartitionByRange(num_files, "__z")
-        if num_files
-        else shaped.repartitionByRange("__z")
-    )
-    shaped.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(
-        path
-    )
-
-
 def compact_parquet(
     spark,
     path: str,

@@ -80,13 +80,20 @@ def test_double_track_same_plan_single_entry(spark):
     assert not a.storageLevel.useMemory
 
 
+def _live_rdd_ids(sc) -> set:
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+
 def test_tracked_local_checkpoint_release(spark):
     """localCheckpoint blocks must be freed by release_caches — a full
     sweep otherwise accumulates checkpoint storage until the context
-    dies (ADVICE r8)."""
+    dies (ADVICE r8). The ledger holds exactly the checkpoint's own
+    block set, also when building the checkpoint materializes a cached
+    relation upstream of it."""
     from algorithmproject_spark_spark.cacheutil import (
         checkpoint_count,
         release_caches,
+        tracked_cache,
         tracked_local_checkpoint,
     )
 
@@ -97,8 +104,45 @@ def test_tracked_local_checkpoint_release(spark):
         spark.range(200).selectExpr("id", "id % 5 AS k")
     )
     assert df.count() == 200
-    assert checkpoint_count() >= 1
+    assert checkpoint_count() == 1
     assert len(sc._jsc.getPersistentRDDs()) > before
     release_caches()
     assert checkpoint_count() == 0
     assert len(sc._jsc.getPersistentRDDs()) == before
+
+    cached = tracked_cache(spark.range(1000).selectExpr("id", "id % 7 AS k"))
+    agg = tracked_local_checkpoint(cached.groupBy("k").count())
+    assert agg.count() == 7
+    assert checkpoint_count() == 1
+    release_caches()
+    assert checkpoint_count() == 0
+    assert len(sc._jsc.getPersistentRDDs()) == before
+
+
+def test_scoped_checkpoint_release_keeps_upstream_cache(spark):
+    """A stream's per-batch checkpoint release frees only the
+    checkpoint's blocks: a cached relation that the checkpoint's build
+    materialized keeps its buffers."""
+    from algorithmproject_spark_spark.cacheutil import (
+        release_caches,
+        scoped_local_checkpoint,
+        tracked_cache,
+    )
+
+    release_caches()
+    sc = spark.sparkContext
+    cached = tracked_cache(spark.range(1000).selectExpr("id", "id % 7 AS k"))
+    agg, release = scoped_local_checkpoint(cached.groupBy("k").count())
+    assert agg.count() == 7
+    # the cached relation's column-buffer RDD (its plan optimizes to
+    # the InMemoryRelation itself)
+    buffers = (
+        cached._jdf.queryExecution().optimizedPlan()
+        .cacheBuilder().cachedColumnBuffers().id()
+    )
+    assert buffers in _live_rdd_ids(sc)
+    release()
+    assert buffers in _live_rdd_ids(sc)
+    assert cached.storageLevel.useMemory
+    release_caches()
+    assert buffers not in _live_rdd_ids(sc)

@@ -27,6 +27,7 @@ FIELDS = {
     "build_py4j",
     "build_jobs",
     "exec_jobs",
+    "checkpoints",
     "shuffle_write_bytes",
     "shuffle_read_bytes",
     "input_bytes",
@@ -52,9 +53,16 @@ def test_every_field_is_recorded(records):
 
 
 def test_checkpoint_loop_runs_jobs_at_build(records):
-    # cacheutil.tracked_local_checkpoint: under AQE even a lazy
-    # checkpoint runs its upstream shuffle stages when the query is built
+    # cacheutil.tracked_local_checkpoint: under AQE a (lazy) checkpoint
+    # runs its upstream shuffle stages when the query is built
     assert records["bpe_merge_induction"]["build_jobs"] >= 1
+
+
+def test_checkpoints_are_counted_per_build(records):
+    # 4 rounds: a `best` checkpoint each, a merged-corpus `tok`
+    # checkpoint after each of the first 3
+    assert records["bpe_merge_induction"]["checkpoints"] == 7
+    assert records["q3_shipping_priority"]["checkpoints"] == 0
 
 
 def test_sql_query_build_runs_no_jobs(records):

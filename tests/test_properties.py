@@ -301,8 +301,8 @@ def test_salted_join_equals_plain_join(spark, big, small, how):
 def test_morton_interleave_roundtrips_and_matches_python(spark, pairs):
     """The codegen'd Morton key must equal the Python reference
     interleave for arbitrary 16-bit inputs (bit-exactness of the
-    shiftright%2 + disjoint-add construction)."""
-    from algorithmproject_spark_spark.sources.writers import _morton_interleave
+    shift-or-mask spread ladder; a on the even bits, b on the odd)."""
+    from algorithmproject_spark_spark.operators.zorder import ss_zvalue16
 
     def py_morton(a: int, b: int) -> int:
         z = 0
@@ -317,9 +317,7 @@ def test_morton_interleave_roundtrips_and_matches_python(spark, pairs):
         for r in df.select(
             "a",
             "b",
-            _morton_interleave(
-                F.col("a").cast("long"), F.col("b").cast("long")
-            ).alias("z"),
+            F.expr(ss_zvalue16("CAST(a AS BIGINT)", "CAST(b AS BIGINT)")).alias("z"),
         ).collect()
     }
     for a, b in pairs:

@@ -225,9 +225,9 @@ def test_zorder_write_skips_on_both_columns(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
+    from algorithmproject_spark_spark.operators.zorder import write_zordered
     from algorithmproject_spark_spark.sources.writers import (
         write_clustered_parquet,
-        write_zorder_parquet,
     )
 
     li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
@@ -236,7 +236,7 @@ def test_zorder_write_skips_on_both_columns(spark, tmp_path):
     single = str(tmp_path / "single")
     zord = str(tmp_path / "zorder")
     write_clustered_parquet(li, single, ("l_orderkey",), num_files=16)
-    write_zorder_parquet(li, zord, "l_orderkey", "l_partkey", num_files=16)
+    write_zordered(li, zord, "l_orderkey", "l_partkey", n_files=16)
 
     def covering(path: str, col: str, probe) -> tuple[int, int]:
         total, cover = 0, 0

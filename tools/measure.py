@@ -18,6 +18,8 @@ write, exactly bench.py's. Each record carries
 - ``build_jobs``, ``exec_jobs`` and the shuffle write, shuffle read and
   input bytes of build plus exec stages, from the in-process status
   store;
+- ``checkpoints``: ``cacheutil`` checkpoints the build takes (the
+  ledger's ``checkpoint_count()`` delta over the build);
 - ``plan_s``: ``executedPlan()`` on the last rep's DataFrame, after its
   write and before the release, outside every timed window.
 
@@ -58,7 +60,7 @@ sys.path.insert(0, REPO)
 
 from py4j.clientserver import ClientServerConnection
 
-from algorithmproject_spark_spark.cacheutil import release_caches
+from algorithmproject_spark_spark.cacheutil import checkpoint_count, release_caches
 from algorithmproject_spark_spark.queries import REGISTRY
 from algorithmproject_spark_spark.queries.itemsets import clear_itemset_cache
 from algorithmproject_spark_spark.session import get_spark
@@ -204,6 +206,7 @@ def measure_query(spark, probe: Probe, sf_dir: str, name: str, n_reps: int = 1) 
             probe.take()  # skip jobs run since the last read
             gc.collect()
             n0 = probe.sends
+            c0 = checkpoint_count()
             probe.on = True
             t0 = time.perf_counter()
             try:
@@ -211,6 +214,7 @@ def measure_query(spark, probe: Probe, sf_dir: str, name: str, n_reps: int = 1) 
             finally:
                 probe.on = False
             t1 = time.perf_counter()
+            checkpoints = checkpoint_count() - c0
             built = probe.take()  # between the two timed windows
             t2 = time.perf_counter()
             # Materialize every row without collecting any.
@@ -243,6 +247,7 @@ def measure_query(spark, probe: Probe, sf_dir: str, name: str, n_reps: int = 1) 
         "build_py4j": probe.sends - n0,
         "build_jobs": built["jobs"],
         "exec_jobs": ran["jobs"],
+        "checkpoints": checkpoints,
         **{k: built[k] + ran[k] for k in built if k != "jobs"},
     }
 
@@ -327,7 +332,15 @@ def main(argv: list[str]) -> int:
         "TOTAL "
         + " ".join(
             f"{k}={sum(r[k] for r in ok):.6g}"
-            for k in ("build_s", "plan_s", "exec_s", "build_py4j", "build_jobs", "exec_jobs")
+            for k in (
+                "build_s",
+                "plan_s",
+                "exec_s",
+                "build_py4j",
+                "build_jobs",
+                "exec_jobs",
+                "checkpoints",
+            )
         )
         + f" over {len(ok)} queries"
     )
