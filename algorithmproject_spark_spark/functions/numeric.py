@@ -92,6 +92,17 @@ def ss_floordiv(num: str, den: str) -> str:
     return f"(({num}) div ({den}))"
 
 
+def tdiv(a: int, b: int) -> int:
+    """Python-int twin of Spark ``div`` / DuckDB BIGINT ``//``: the
+    quotient truncated toward zero, for either operand's sign. Python's
+    own ``//`` floors, which diverges by 1 whenever the signs differ
+    (−7 // 8 = −1 vs trunc 0; 7 // −2 = −4 vs trunc −3) — nonnegative
+    fixtures mask it, but a negative value (a refund, a falling trend)
+    must not silently split the engines."""
+    q = abs(a) // abs(b)
+    return q if (a >= 0) == (b >= 0) else -q
+
+
 def ss_ppm(count_expr: str, total_expr: str) -> str:
     """EXACT floor(count * 1e6 / total) with bounded intermediates.
 

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from algorithmproject_spark_spark.cacheutil import tracked_cache
+from algorithmproject_spark_spark.functions.numeric import tdiv
 from algorithmproject_spark_spark.functions.vectors import EMB_DIM, ss_to_double
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
@@ -59,14 +60,6 @@ PCA_ITERS = 100  # fixed power-iteration rounds (unrolled in the oracle).
 # 8 rounds was 0.57 (useless), 100 rounds is <1e-3. Each round is a
 # 64-row matvec: trivially cheap on both engines, the unrolled oracle
 # just carries 300 small CTEs.
-
-
-def _tdiv(a: int, b: int) -> int:
-    """Truncate-toward-zero division on Python ints — Python ``//``
-    floors, which diverges from Spark ``div`` / DuckDB BIGINT ``//``
-    on negative operands; the eigensolve must match both."""
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
 
 
 def ss_quant(emb: str) -> str:
@@ -153,8 +146,8 @@ def _power_iterate(cov: list[list[int]]) -> list[int]:
         # in the oracle once y reaches ~1e13 (sf0.01 already does);
         # y // max(sc // X_SCALE, 1) keeps max-abs within [X, 2X)
         # without any multiplication, identically on both engines
-        div = max(_tdiv(sc, X_SCALE), 1)
-        x = [_tdiv(v, div) for v in y]
+        div = max(tdiv(sc, X_SCALE), 1)
+        x = [tdiv(v, div) for v in y]
     return x
 
 
@@ -175,10 +168,10 @@ def _deflate(cov: list[list[int]], x: list[int]) -> list[list[int]]:
     d = len(cov)
     y = [sum(cov[i][j] * x[j] for j in range(d)) for i in range(d)]
     xtx = sum(v * v for v in x)
-    d0 = max(_tdiv(xtx, X_SCALE), 1)
-    t = [_tdiv(v, d0) for v in y]
+    d0 = max(tdiv(xtx, X_SCALE), 1)
+    t = [tdiv(v, d0) for v in y]
     return [
-        [cov[i][j] - _tdiv(t[i] * x[j], X_SCALE) for j in range(d)]
+        [cov[i][j] - tdiv(t[i] * x[j], X_SCALE) for j in range(d)]
         for i in range(d)
     ]
 
@@ -201,7 +194,7 @@ def _cov_matrix(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     if n == 0:
         return None
     return [
-        [m[i][j] - _tdiv(s[i] * s[j], n) for j in range(d)]
+        [m[i][j] - tdiv(s[i] * s[j], n) for j in range(d)]
         for i in range(d)
     ]
 
@@ -268,7 +261,7 @@ def _sql_power_ctes(
 ) -> str:
     """Unrolled power-iteration CTEs over the ``cov`` (i, j, c) matrix
     CTE, ending in ``{prefix}x{iters}(i, v)``. DuckDB BIGINT ``//``
-    truncates toward zero like the driver-side _tdiv, and the renorm
+    truncates toward zero like the Python-side tdiv, and the renorm
     guard mirrors the sc == 0 break. The prefix keeps a second
     (deflated) chain's CTE names disjoint from the first's."""
     # every CTE MATERIALIZED: px{{t}} is referenced twice per round

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from algorithmproject_spark_spark.functions.numeric import ss_floordiv, ss_scaled_long
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
+from algorithmproject_spark_spark.streaming.markov import adjacent_pairs
 
 TOPK_ENTROPY = 20
 TOPK_ISLANDS = 25
@@ -72,13 +73,8 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    # deterministic user timeline: ts with event_id tiebreak (ts
-    # collisions exist in the fixtures; an untied sort would be
-    # partition-order dependent)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
     t = (
-        ev.withColumn("dst", F.lead("event_type").over(w))
-        .filter(F.col("dst").isNotNull())
+        adjacent_pairs(ev)
         .groupBy(F.col("event_type").alias("src"), "dst")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -18,7 +18,7 @@ COMPACTED per-type daily relation (calendar-bounded, never the event
 corpus), and the DuckDB twin is a recursive CTE computing the
 identical integer steps. Values can be negative (trends usually are),
 so every division is the truncating ``tdiv`` — the exact divergence
-class the `_tdiv` lesson exists for.
+class functions/numeric.py::tdiv exists for.
 
 Output per (type, day): the day's mean, the pre-update forecast
 ``forecast_micros`` (NULL on day 1 — no prior state), the absolute
@@ -28,49 +28,47 @@ dashboard plots and an alerting rule thresholds.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from algorithmproject_spark_spark.functions.numeric import tdiv
 from algorithmproject_spark_spark.queries.spc import (
+    _SQL_CLOSED_DAYS,
     _SQL_EWMA_DAILY,
-    _tdiv,
+    closed_days,
     ewma_daily,
+    walk_chart,
+    walk_days,
 )
 from algorithmproject_spark_spark.registry import register
 from algorithmproject_spark_spark.sources.catalog import load_table
 
-_HOLT_SCHEMA = (
-    "event_type string, day long, mean_micros long, forecast_micros long, "
-    "abs_err_micros long, level_micros long, trend_micros long"
+#: the forecast's per-day columns, in the order ``holt_step`` emits them
+_HOLT_COLS = (
+    "day",
+    "mean_micros",
+    "forecast_micros",
+    "abs_err_micros",
+    "level_micros",
+    "trend_micros",
 )
 
 
+def holt_step(lvl: int, tr: int, k: int, day: int, mean: int):
+    """Fold day ``k`` (0-based) of a type's series into the Holt state
+    (lvl, tr); returns (row, lvl, tr). The one step of the recurrence:
+    the batch walk and the stream (streaming/closedday.py) both call
+    it."""
+    if k == 0:
+        return (day, mean, None, None, mean, 0), mean, 0
+    fc = lvl + tr
+    err = abs(mean - fc)
+    new_lvl = tdiv(mean + 3 * fc, 4)  # alpha = 1/4
+    new_tr = tdiv((new_lvl - lvl) + 7 * tr, 8)  # beta = 1/8
+    return (day, mean, fc, err, new_lvl, new_tr), new_lvl, new_tr
+
+
 def _holt_walk(pdf):
-    pdf = pdf.sort_values("day")
-    lvl = tr = None
-    out = []
-    for day, x in zip(pdf["day"], pdf["mean_micros"]):
-        x = int(x)
-        if lvl is None:
-            fc, err, lvl, tr = None, None, x, 0
-        else:
-            fc = lvl + tr
-            err = abs(x - fc)
-            new_lvl = _tdiv(x + 3 * fc, 4)  # alpha = 1/4
-            tr = _tdiv((new_lvl - lvl) + 7 * tr, 8)  # beta = 1/8
-            lvl = new_lvl
-        out.append((int(day), x, fc, err, lvl, tr))
-    return pd.DataFrame(
-        out,
-        columns=[
-            "day",
-            "mean_micros",
-            "forecast_micros",
-            "abs_err_micros",
-            "level_micros",
-            "trend_micros",
-        ],
-    ).assign(event_type=pdf["event_type"].iloc[0])
+    return walk_days(pdf, holt_step, _HOLT_COLS)
 
 
 def _sql_holt_recursive(base_inner: str) -> str:
@@ -125,49 +123,22 @@ def _sql_holt_recursive(base_inner: str) -> str:
     ),
 )
 def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = ewma_daily(load_table(spark, sf_dir, "events"))
-    return daily.groupBy("event_type").applyInPandas(
-        _holt_walk, schema=_HOLT_SCHEMA
-    ).select(
-        "event_type",
-        "day",
-        "mean_micros",
-        "forecast_micros",
-        "abs_err_micros",
-        "level_micros",
-        "trend_micros",
-    )
+    return holt_walk_chart(ewma_daily(load_table(spark, sf_dir, "events")))
 
 
 def holt_walk_chart(daily: DataFrame) -> DataFrame:
     """Arrow walk of the Holt recurrence over a daily-mean relation —
     shared by the batch forecast and the streaming twin's batch form."""
-    return daily.groupBy("event_type").applyInPandas(
-        _holt_walk, schema=_HOLT_SCHEMA
-    ).select(
-        "event_type",
-        "day",
-        "mean_micros",
-        "forecast_micros",
-        "abs_err_micros",
-        "level_micros",
-        "trend_micros",
-    )
+    return walk_chart(daily, _holt_walk, _HOLT_COLS)
 
 
 @register(
     "stream_holt_batch_twin",
     plan=("arrow",),
-    oracle=_sql_holt_recursive(f"""
-        SELECT event_type, day, mean_micros FROM (
-            SELECT event_type, day, mean_micros,
-                   max(day) OVER (PARTITION BY event_type) AS mxd
-            FROM ({_SQL_EWMA_DAILY})
-        ) WHERE day < mxd
-    """),
+    oracle=_sql_holt_recursive(_SQL_CLOSED_DAYS),
     doc=(
         "batch twin of the streaming Holt forecaster "
-        "(streaming/holtstream.py, 14th stateful twin): the coupled "
+        "(streaming/closedday.py, 14th stateful twin): the coupled "
         "level+trend recurrence over every CLOSED day — a day is "
         "scoreable only once a later day has arrived, so each type's "
         "maximum (still-open) day is excluded; the stateful stream's "
@@ -175,13 +146,5 @@ def holt_walk_chart(daily: DataFrame) -> DataFrame:
     ),
 )
 def stream_holt_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     daily = ewma_daily(load_table(spark, sf_dir, "events"))
-    mx = daily.groupBy("event_type").agg(F.max("day").alias("mxd"))
-    closed = (
-        daily.join(F.broadcast(mx), "event_type")
-        .filter(F.col("day") < F.col("mxd"))
-        .drop("mxd")
-    )
-    return holt_walk_chart(closed)
+    return holt_walk_chart(closed_days(daily))

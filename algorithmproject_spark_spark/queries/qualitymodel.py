@@ -22,7 +22,7 @@ Features, fastText-style:
 - score = trunc(sum_of_weights / n_features) + bias — the mean-pooled
   linear layer in ppm units; trunc division matches Spark ``div`` and
   DuckDB BIGINT ``//`` (both toward zero; sums can be negative, so
-  floor semantics would diverge — the _tdiv lesson from the EWMA
+  floor semantics would diverge — the tdiv lesson from the EWMA
   family).
 
 Scale shape: MAP-ONLY. The weight vector is an in-plan literal (a

@@ -41,6 +41,7 @@ from algorithmproject_spark_spark.functions.numeric import (
     ss_floordiv,
     ss_micros,
     ss_scaled_long,
+    tdiv,
 )
 from algorithmproject_spark_spark.queries.trend import _epoch_day
 from algorithmproject_spark_spark.registry import register
@@ -526,7 +527,8 @@ def events_dow_adjusted_outliers(
 #
 # Recurrence (all BIGINT, α = 1/8 as an exact rational; // is
 # DuckDB's truncate-toward-zero BIGINT division, mirrored in Python
-# by _tdiv8 — Python's own // floors and diverges on negatives):
+# by functions/numeric.py::tdiv — Python's own // floors and diverges
+# on negatives):
 #   s_1 = x_1                  m_1 = 0
 #   s_d = (7·s_{d-1} + x_d) // 8
 #   m_d = (7·m_{d-1} + |x_d − s_{d-1}|) // 8
@@ -537,44 +539,45 @@ def events_dow_adjusted_outliers(
 # not a total, so 7·s never approaches BIGINT range at 100 TB).
 # ---------------------------------------------------------------------------
 
-_EWMA_SCHEMA = (
-    "event_type string, day long, mean_micros long, "
-    "ewma_micros long, mad_micros long, flag long"
-)
+#: the chart's per-day columns, in the order ``ewma_step`` emits them
+_EWMA_COLS = ("day", "mean_micros", "ewma_micros", "mad_micros", "flag")
 
 
-def _tdiv(a: int, d: int) -> int:
-    """a / d truncated toward zero — Spark ``div`` / DuckDB BIGINT
-    ``//`` semantics. Python's ``//`` FLOORS, which diverges by 1 on
-    negative numerators (−7 // 8 = −1 vs trunc 0); nonnegative fixtures
-    mask it, but a corpus with negative values (refunds, adjustments)
-    must not silently split the engines."""
-    return -((-a) // d) if a < 0 else a // d
+def day_chart_schema(cols) -> str:
+    """DDL of a per-type day chart: the type key plus BIGINT columns."""
+    return "event_type string, " + ", ".join(f"{c} long" for c in cols)
 
 
-def _tdiv8(a: int) -> int:
-    """a / 8 truncated toward zero (see :func:`_tdiv`)."""
-    return _tdiv(a, 8)
+def ewma_step(s: int, m: int, k: int, day: int, mean: int):
+    """Fold day ``k`` (0-based) of a type's series into the EWMA state
+    (s, m); returns (row, s, m). The one step of the recurrence: the
+    batch walk and the stream (streaming/closedday.py) both call it."""
+    if k == 0:
+        return (day, mean, mean, 0, 0), mean, 0
+    dev = abs(mean - s)
+    flag = 1 if k >= 3 and m > 0 and dev > 3 * m else 0
+    s, m = tdiv(7 * s + mean, 8), tdiv(7 * m + dev, 8)
+    return (day, mean, s, m, flag), s, m
 
 
-def _ewma_walk(pdf):
+def walk_days(pdf, step, cols):
+    """Fold one type's complete day series, in day order, through
+    ``step`` — the Arrow-group body of the batch recurrence queries."""
     import pandas as pd
 
     pdf = pdf.sort_values("day")
-    s = m = None
-    out = []
-    for day, x in zip(pdf["day"], pdf["mean_micros"]):
-        x = int(x)
-        if s is None:
-            s, m, flag = x, 0, 0
-        else:
-            dev = abs(x - s)
-            flag = 1 if len(out) >= 3 and m > 0 and dev > 3 * m else 0
-            s, m = _tdiv8(7 * s + x), _tdiv8(7 * m + dev)
-        out.append((int(day), x, s, m, flag))
-    return pd.DataFrame(
-        out, columns=["day", "mean_micros", "ewma_micros", "mad_micros", "flag"]
-    ).assign(event_type=pdf["event_type"].iloc[0])
+    a = b = 0
+    rows = []
+    for k, (day, mean) in enumerate(zip(pdf["day"], pdf["mean_micros"])):
+        row, a, b = step(a, b, k, int(day), int(mean))
+        rows.append(row)
+    return pd.DataFrame(rows, columns=list(cols)).assign(
+        event_type=pdf["event_type"].iloc[0]
+    )
+
+
+def _ewma_walk(pdf):
+    return walk_days(pdf, ewma_step, _EWMA_COLS)
 
 
 #: daily floor-mean value in micros — the recurrence input relation
@@ -655,27 +658,48 @@ def ewma_daily(events: DataFrame) -> DataFrame:
     )
 
 
-def ewma_walk_chart(daily: DataFrame) -> DataFrame:
-    """Arrow walk of the recurrence over a daily-mean relation."""
+def walk_chart(daily: DataFrame, walk, cols) -> DataFrame:
+    """Arrow walk of a day recurrence over a daily-mean relation: one
+    ``applyInPandas`` group per type, ``walk`` folding its days."""
     return daily.groupBy("event_type").applyInPandas(
-        _ewma_walk, schema=_EWMA_SCHEMA
-    ).select(
-        "event_type", "day", "mean_micros", "ewma_micros", "mad_micros", "flag"
-    )
+        walk, schema=day_chart_schema(cols)
+    ).select("event_type", *cols)
 
 
-@register(
-    "stream_ewma_batch_twin",
-    oracle=_sql_ewma_recursive(f"""
+def ewma_walk_chart(daily: DataFrame) -> DataFrame:
+    """Arrow walk of the EWMA recurrence over a daily-mean relation."""
+    return walk_chart(daily, _ewma_walk, _EWMA_COLS)
+
+
+#: the closed days of the daily relation: each type's maximum day is
+#: still open in a stream (a day is scoreable only once a later day
+#: has arrived), so the closed-day twins drop it
+_SQL_CLOSED_DAYS = f"""
         SELECT event_type, day, mean_micros FROM (
             SELECT event_type, day, mean_micros,
                    max(day) OVER (PARTITION BY event_type) AS mxd
             FROM ({_SQL_EWMA_DAILY})
         ) WHERE day < mxd
-    """),
+    """
+
+
+def closed_days(daily: DataFrame) -> DataFrame:
+    """Spark form of the ``_SQL_CLOSED_DAYS`` filter: the daily relation
+    minus each type's maximum day — the input of both closed-day twins."""
+    mx = daily.groupBy("event_type").agg(F.max("day").alias("mxd"))
+    return (
+        daily.join(F.broadcast(mx), "event_type")
+        .filter(F.col("day") < F.col("mxd"))
+        .drop("mxd")
+    )
+
+
+@register(
+    "stream_ewma_batch_twin",
+    oracle=_sql_ewma_recursive(_SQL_CLOSED_DAYS),
     doc=(
         "batch twin of the streaming EWMA control chart "
-        "(streaming/ewmastream.py): the recurrence over every CLOSED "
+        "(streaming/closedday.py): the recurrence over every CLOSED "
         "day — a day is scoreable only once a later day has arrived, "
         "so each type's maximum (still-open) day is excluded; the "
         "stateful stream's append output converges to exactly this "
@@ -685,10 +709,4 @@ def ewma_walk_chart(daily: DataFrame) -> DataFrame:
 )
 def stream_ewma_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ewma_daily(load_table(spark, sf_dir, "events"))
-    mx = daily.groupBy("event_type").agg(F.max("day").alias("mxd"))
-    closed = (
-        daily.join(F.broadcast(mx), "event_type")
-        .filter(F.col("day") < F.col("mxd"))
-        .drop("mxd")
-    )
-    return ewma_walk_chart(closed)
+    return ewma_walk_chart(closed_days(daily))

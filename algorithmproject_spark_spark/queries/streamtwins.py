@@ -1,14 +1,20 @@
 """Driver-checkable BATCH TWINS of the streaming operators.
 
-The streaming family (streaming/dedup.py, windows.py, stateful.py) is
-pytest-verified by driving real file-streams, but the external driver's
-correctness gate runs batch queries only. Structured Streaming's core
-guarantee — a streaming query computes the same answer as the batch
-query over the same (finite) input — makes the batch-degenerate form of
-each operator a faithful, oracle-checkable stand-in: these queries call
-the SAME operator functions on a batch frame, so a green row here
-certifies the shared logical plan, with tests/test_streaming.py
-covering the incremental execution of that plan.
+The streaming family (streaming/*.py) is pytest-verified by driving
+real file-streams, but the oracle correctness gate
+(``__spark_entry__.py``) runs batch queries only. Structured Streaming's core guarantee — a
+streaming query computes the same answer as the batch query over the
+same (finite) input — makes the batch-degenerate form of each operator
+an oracle-checkable stand-in. A twin is one of two kinds:
+
+- it runs the stream's OWN kernel on a batch frame (KMV, HDR, and the
+  closed-day EWMA/Holt twins in queries/spc.py and queries/holt.py,
+  whose walk folds the same step function the stream calls), so a
+  green row certifies that kernel;
+- or it is the relational query tests/test_streaming.py holds the
+  stream to (Markov transitions, user profile): a Catalyst window or
+  aggregate whose answer the stream's state fold must reproduce, with
+  no separate Python fold of its own.
 
 Reference has no stateful streaming at all (SURVEY.md §3.4); this
 family is engine extension surface.
@@ -94,7 +100,6 @@ def stream_session_windows_batch_twin(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "stream_user_profile_batch_twin",
-    plan=("arrow",),
     oracle="""
     SELECT user_id,
            count(*) AS n_events,
@@ -104,9 +109,9 @@ def stream_session_windows_batch_twin(spark: SparkSession, sf_dir: str) -> DataF
     FROM events GROUP BY user_id
     """,
     doc="batch twin of the applyInPandasWithState per-user profile: the "
-    "same Arrow/numpy merge kernel folds each key's full history in one "
-    "applyInPandas pass (exact integer cents, so state merge order can "
-    "never perturb the streaming result either)",
+    "per-user aggregate the drained stream's last update per key must "
+    "equal, as one Catalyst groupBy (exact integer cents, so state "
+    "merge order can never perturb the streaming result either)",
 )
 def stream_user_profile_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -115,7 +120,6 @@ def stream_user_profile_batch_twin(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "stream_markov_batch_twin",
-    plan=("arrow",),
     oracle="""
     WITH seq AS (
         SELECT event_type,
@@ -128,10 +132,9 @@ def stream_user_profile_batch_twin(spark: SparkSession, sf_dir: str) -> DataFram
     FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2
     """,
     doc="batch twin of the applyInPandasWithState Markov transition "
-    "counter (streaming/markov.py): the same pair-counting kernel folds "
-    "each user's full (ts, event_id)-ordered history in one "
-    "applyInPandas pass; global counts match the lead-window batch "
-    "query exactly",
+    "counter (streaming/markov.py): the per-user lead-window counts the "
+    "stream's summed increments must equal, summed per (src, dst) — a "
+    "Catalyst window and two aggregates, no Python fold",
 )
 def stream_markov_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(

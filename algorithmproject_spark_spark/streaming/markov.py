@@ -1,7 +1,8 @@
 """Streaming Markov transition counting — per-key sequence state.
 
-The batch form (queries/behavior.py::events_markov_transitions) uses a
-``lead`` window over each user's full timeline; a stream never HAS the
+The batch form (``adjacent_pairs``, counted by ``transition_counts_batch``
+and queries/behavior.py::events_markov_transitions) is a ``lead``
+window over each user's full timeline; a stream never HAS the
 full timeline, so the streaming form keeps exactly one value of state
 per user — the LAST event type seen — and emits the transitions each
 micro-batch completes: the carried ``last_type → first event of this
@@ -29,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -98,76 +99,27 @@ def transition_counts_stateful(events: DataFrame) -> DataFrame:
     )
 
 
+def adjacent_pairs(events: DataFrame) -> DataFrame:
+    """``events`` plus ``dst``, the next event type on the user's
+    (ts, event_id)-ordered timeline; rows with no successor dropped.
+    One row per transition — the relation both the batch Markov model
+    (queries/behavior.py) and this stream's summed increments count.
+    event_id breaks ts ties: ts collisions exist in the fixtures, and
+    an untied order would be partition-order dependent."""
+    return events.withColumn(
+        "dst",
+        F.expr(
+            "lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+        ),
+    ).filter("dst IS NOT NULL")
+
+
 def transition_counts_batch(events: DataFrame) -> DataFrame:
-    """Batch-degenerate twin: each user's whole history is one
-    "micro-batch", so the stateful fold collapses to one ordered pass.
-
-    r12 (guide §4): vectorized — rows are hash-partitioned by user and
-    (user_id, ts, event_id)-sorted within partitions, then ONE pandas
-    pass per partition counts every user's adjacent pairs (pair i is
-    counted iff row i and i+1 belong to the same user, exactly the
-    per-user ordered zip ``_batch_transitions`` folds). The per-key
-    ``applyInPandas`` form paid a Python call + DataFrame construction
-    per user (data-scale overhead: billions of keys at 100 TB, and AQE
-    coalesces the small local shuffle to few partitions so the
-    sequential per-group loop dominated — measured 6.5 s → vectorized
-    sub-second at sf0.1 for the same result). Per-partition memory is
-    bounded by the shuffle partition size."""
-
-    def fold_partition(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        # Incremental per-batch fold with ONE carry row (r13, VERDICT
-        # r12 #6): adjacency crosses Arrow batch boundaries, but only
-        # through the last row of the previous batch — prepending it
-        # preserves every cross-boundary pair, so the whole-partition
-        # concat (which concentrated a hot user's partition in memory
-        # at 100 TB — AQE skew-split cannot cross a repartition(col) +
-        # mapInPandas boundary) is never built. Peak state: one batch
-        # + the per-batch partial counts (bounded by distinct
-        # transition triples, the output's own size).
-        import numpy as np
-
-        partials = []
-        carry_u = None
-        carry_e = None
-        for b in batches:
-            if not len(b):
-                continue
-            u = b["user_id"].to_numpy()
-            et = b["event_type"].astype(str).to_numpy()
-            if carry_u is not None:
-                u = np.concatenate(([carry_u], u))
-                et = np.concatenate(([carry_e], et))
-            carry_u, carry_e = u[-1], et[-1]
-            same = u[:-1] == u[1:]
-            if not same.any():
-                continue
-            adj = pd.DataFrame(
-                {
-                    "user_id": u[:-1][same],
-                    "src": et[:-1][same],
-                    "dst": et[1:][same],
-                }
-            )
-            partials.append(
-                adj.groupby(["user_id", "src", "dst"], sort=False)
-                .size()
-                .reset_index(name="cnt")
-            )
-        if not partials:
-            return
-        counts = (
-            pd.concat(partials, ignore_index=True)
-            .groupby(["user_id", "src", "dst"], sort=False)["cnt"]
-            .sum()
-            .reset_index()
-        )
-        counts["cnt"] = counts["cnt"].astype("int64")
-        yield counts
-
-    return (
-        events.repartition("user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(fold_partition, schema=TRANSITION_OUTPUT_SCHEMA)
-    )
+    """Batch twin of :func:`transition_counts_stateful`: per-user
+    (src, dst) counts over each user's whole timeline — what the
+    stream's increments sum to when events arrive in (ts, event_id)
+    order. A lead window and one aggregate in Catalyst; the adjacency
+    is a window, so no Python fold and no carry row is needed."""
+    return adjacent_pairs(events).groupBy(
+        "user_id", F.expr("event_type AS src"), "dst"
+    ).agg(F.expr("count(1) AS cnt"))

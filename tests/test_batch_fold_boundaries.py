@@ -1,29 +1,18 @@
-"""Arrow-batch-boundary safety of the vectorized batch-twin folds.
+"""Value pins of the Markov and user-profile batch twins
+(streaming/markov.py::transition_counts_batch,
+streaming/stateful.py::user_profile_batch) against a pure-Python
+re-derivation over a small multi-user frame.
 
-VERDICT r12 #6: the markov/profile batch twins used to concat the
-whole shuffle partition into one pandas frame; r13 replaced that with
-incremental per-batch folds (carry row for adjacency, additive
-partials + running distinct pairs for the profile). These tests force
-MANY tiny Arrow batches per partition (maxRecordsPerBatch=3 over
-dozens of rows) and pin the results to a pure-Python re-derivation —
-if a fold ever drops or double-counts a batch-boundary pair, this is
-the test that goes red.
+Both twins are Catalyst relations — a lead window counted per
+(user, src, dst), and one per-user aggregate — so there is no Python
+fold whose batch boundaries could drop or double-count a pair; these
+pins hold the relations to the model the streams must reproduce.
 """
 
 from __future__ import annotations
 
 import math
 from collections import defaultdict
-
-import pytest
-
-
-@pytest.fixture()
-def tiny_batches(spark):
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    yield spark
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def _events(spark, n_users: int = 4, n_per_user: int = 13):
@@ -40,8 +29,7 @@ def _events(spark, n_users: int = 4, n_per_user: int = 13):
     )
 
 
-def test_markov_twin_counts_across_many_arrow_batches(tiny_batches):
-    spark = tiny_batches
+def test_markov_twin_counts_match_python_model(spark):
     from algorithmproject_spark_spark.streaming.markov import (
         transition_counts_batch,
     )
@@ -63,8 +51,7 @@ def test_markov_twin_counts_across_many_arrow_batches(tiny_batches):
     assert got == dict(expected)
 
 
-def test_profile_twin_aggregates_across_many_arrow_batches(tiny_batches):
-    spark = tiny_batches
+def test_profile_twin_aggregates_match_python_model(spark):
     from algorithmproject_spark_spark.streaming.stateful import (
         user_profile_batch,
     )

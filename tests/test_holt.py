@@ -5,7 +5,7 @@ truncation behavior."""
 from __future__ import annotations
 
 from algorithmproject_spark_spark.queries import REGISTRY
-from algorithmproject_spark_spark.queries.spc import _tdiv
+from algorithmproject_spark_spark.functions.numeric import tdiv
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,8 +20,8 @@ def _py_holt(series):
             continue
         fc = lvl + tr
         err = abs(x - fc)
-        new_lvl = _tdiv(x + 3 * fc, 4)
-        tr = _tdiv((new_lvl - lvl) + 7 * tr, 8)
+        new_lvl = tdiv(x + 3 * fc, 4)
+        tr = tdiv((new_lvl - lvl) + 7 * tr, 8)
         lvl = new_lvl
         out.append((day, x, fc, err, lvl, tr))
     return out
@@ -69,4 +69,4 @@ def test_truncating_division_on_negative_trends():
     day2 = rows[1]
     fc = day2[4] + day2[5]
     assert day3[2] == fc
-    assert day3[4] == _tdiv(day3[1] + 3 * fc, 4)
+    assert day3[4] == tdiv(day3[1] + 3 * fc, 4)

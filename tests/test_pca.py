@@ -6,12 +6,12 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from algorithmproject_spark_spark.functions.numeric import tdiv
 from algorithmproject_spark_spark.operators.pca import (
     EMB_DIM,
     PCA_ITERS,
     Q_SCALE,
     X_SCALE,
-    _tdiv,
     embedding_moments,
     principal_direction,
 )
@@ -91,7 +91,7 @@ def test_empty_corpus_guard(spark):
     assert len(parts) == 1
     n_row = parts[0][(parts[0].i == -1) & (parts[0].j == -1)]
     assert int(n_row.v.iloc[0]) == 0
-    assert _tdiv(-7, 2) == -3 and _tdiv(7, -2) == -3 and _tdiv(-7, -2) == 3
+    assert tdiv(-7, 2) == -3 and tdiv(7, -2) == -3 and tdiv(-7, -2) == 3
 
 
 def test_iters_constant_matches_oracle_unroll():

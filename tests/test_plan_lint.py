@@ -6,9 +6,12 @@ or documents why it belongs on a list."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+import pandas as pd
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "tools"))
 
 from plan_lint import lint_registry  # noqa: E402
 
@@ -21,7 +24,9 @@ def test_every_registered_plan_is_scale_clean(spark):
 def test_undeclared_python_node_still_fails(spark):
     """The allow-lists are derived from register(plan=...) traits; a
     query with a Python eval node but NO 'arrow' trait must still be a
-    violation (the derivation didn't silently allow everything)."""
+    violation (the derivation didn't silently allow everything). Two
+    probes: a row-at-a-time UDF, and a grouped-agg pandas UDF, which
+    Spark 4 plans as ``ArrowAggregatePython``."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
@@ -32,11 +37,23 @@ def test_undeclared_python_node_still_fails(spark):
         udf = F.udf(lambda x: x + 1, LongType())
         return s.range(10).select(udf(F.col("id")).alias("v"))
 
+    @F.pandas_udf("double")
+    def _median(v: pd.Series) -> float:
+        return float(v.median())
+
+    @register("_lint_probe_agg", oracle=None, doc="test-only")
+    def _probe_agg(s, sf_dir):
+        return s.range(10).groupBy((F.col("id") % 2).alias("k")).agg(
+            _median(F.col("id")).alias("med")
+        )
+
+    probes = ["_lint_probe_py", "_lint_probe_agg"]
     try:
-        v = lint_registry(spark, names=["_lint_probe_py"])
-        assert v == ["_lint_probe_py: undeclared Python eval node"]
+        v = lint_registry(spark, names=probes)
+        assert v == [f"{n}: undeclared Python eval node" for n in probes]
     finally:
-        del REGISTRY["_lint_probe_py"]
+        for n in probes:
+            del REGISTRY[n]
 
 
 def test_unknown_plan_trait_rejected():

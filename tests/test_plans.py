@@ -133,8 +133,9 @@ def test_llmprep_reads_prune_columns(spark):
 
 def test_stream_batch_twins_shuffle_posture(spark):
     """Session twin: exactly one Exchange (the session aggregation);
-    profile twin: one Exchange into the Arrow fold, partitioned by the
-    grouping key exactly like the streaming state store would be."""
+    profile twin: one Catalyst aggregate with no Python node — its
+    distinct type count plans as the usual two Exchanges, the partial
+    aggregate keyed by (user, type) and the final one by user."""
     p = plan_of(REGISTRY["stream_session_windows_batch_twin"].fn(spark, SF))
     # "Exchange (" counts tree nodes once (formatted mode repeats each
     # node in the details section)
@@ -142,10 +143,8 @@ def test_stream_batch_twins_shuffle_posture(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
     p = plan_of(REGISTRY["stream_user_profile_batch_twin"].fn(spark, SF))
-    assert p.count("Exchange (") == 1
-    # r12: the per-key FlatMapGroupsInPandas fold is vectorized into a
-    # partition-level MapInPandas over the same user-hash partitioning
-    assert "MapInPandas" in p  # the declared Arrow kernel
+    assert p.count("Exchange (") == 2
+    assert "Python" not in p and "InPandas" not in p
 
 
 def test_lloyd_assignment_is_map_only_plus_broadcast_probe(spark):

@@ -31,7 +31,7 @@ def test_ewma_recurrence_identity(ewma_rows):
     for r in ewma_rows:
         by_type[r.event_type].append(r)
     assert by_type
-    from algorithmproject_spark_spark.queries.spc import _tdiv8
+    from algorithmproject_spark_spark.functions.numeric import tdiv
 
     for rows in by_type.values():
         rows.sort(key=lambda r: r.day)
@@ -43,20 +43,22 @@ def test_ewma_recurrence_identity(ewma_rows):
             else:
                 dev = abs(x - s)
                 flag = 1 if d >= 3 and m > 0 and dev > 3 * m else 0
-                s, m = _tdiv8(7 * s + x), _tdiv8(7 * m + dev)
+                s, m = tdiv(7 * s + x, 8), tdiv(7 * m + dev, 8)
             assert (r.ewma_micros, r.mad_micros, r.flag) == (s, m, flag)
 
 
 def test_tdiv8_truncates_like_duckdb():
     """Negative numerators must truncate toward zero (DuckDB //), not
-    floor (Python //): the cross-engine parity the walk depends on."""
-    from algorithmproject_spark_spark.queries.spc import _tdiv8
+    floor (Python //): the cross-engine parity the walk depends on —
+    and so must a negative divisor."""
+    from algorithmproject_spark_spark.functions.numeric import tdiv
 
-    assert _tdiv8(-7) == 0
-    assert _tdiv8(-8) == -1
-    assert _tdiv8(-9) == -1
-    assert _tdiv8(7) == 0
-    assert _tdiv8(15) == 1
+    assert tdiv(-7, 8) == 0
+    assert tdiv(-8, 8) == -1
+    assert tdiv(-9, 8) == -1
+    assert tdiv(7, 8) == 0
+    assert tdiv(15, 8) == 1
+    assert tdiv(7, -2) == -3
 
 
 def test_ewma_warmup_never_flags(ewma_rows):

@@ -77,27 +77,21 @@ def test_stream_parquet_sink_checkpointed(spark, events_dir, scratch):
 
 def test_stateful_user_profile_stream(spark, events_dir):
     """applyInPandasWithState: final per-user profile equals the batch
-    aggregate (after the stream drains, the last update per key wins)."""
-    from pyspark.sql import functions as F
-
+    twin's aggregate (after the stream drains, the last update per key
+    wins)."""
     from algorithmproject_spark_spark.streaming import user_profile_stateful
     from algorithmproject_spark_spark.streaming.facade import (
         stream_read_parquet,
         stream_write_memory,
     )
+    from algorithmproject_spark_spark.streaming.stateful import (
+        user_profile_batch,
+    )
 
     batch = spark.read.parquet(str(events_dir))
     expected = {
-        r["user_id"]: (r["n"], r["cents"], r["nt"])
-        for r in batch.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            ).alias("cents"),
-            F.countDistinct("event_type").alias("nt"),
-        )
-        .collect()
+        r["user_id"]: (r["n_events"], r["value_cents"], r["n_types"])
+        for r in user_profile_batch(batch).collect()
     }
 
     stream = stream_read_parquet(spark, str(events_dir), batch.schema)
@@ -916,7 +910,7 @@ def test_ewma_stream_equals_batch_twin(spark, events_dir):
     from algorithmproject_spark_spark.queries.spc import (
         stream_ewma_batch_twin,
     )
-    from algorithmproject_spark_spark.streaming.ewmastream import (
+    from algorithmproject_spark_spark.streaming.closedday import (
         ewma_stateful,
     )
     from algorithmproject_spark_spark.streaming.facade import (
@@ -1036,7 +1030,7 @@ def test_holt_stream_equals_batch_twin(spark, events_dir):
         stream_read_parquet,
         stream_write_memory,
     )
-    from algorithmproject_spark_spark.streaming.holtstream import (
+    from algorithmproject_spark_spark.streaming.closedday import (
         holt_stateful,
     )
 

@@ -8,10 +8,12 @@ physical plan and fails on the classes of node that do not survive a
 - ``CartesianProduct`` / ``BroadcastNestedLoopJoin``: O(n·m) joins. A
   tiny allowlist covers intentional bounded uses (a literal 1-row
   frame, a braodcast of a constant grid) — currently empty.
-- ``BatchEvalPython`` / ``ArrowEvalPython`` / ``FlatMapGroupsInPandas``
-  / ``MapInPandas`` / ``AggregateInPandas``  / ``MapInArrow`` outside
-  the declared Arrow-kernel allowlist: Python in a hot path that was
-  designed JVM-side is a regression, not a choice.
+- a Python exec node outside the declared Arrow-kernel allowlist:
+  Python in a hot path that was designed JVM-side is a regression, not
+  a choice. Spark 4 names these ``BatchEvalPython``, ``Arrow*Python``
+  (eval, grouped-agg, window), ``*InPandas`` and ``*InArrow`` (map,
+  grouped and cogrouped maps, the stateful stream forms) and
+  ``TransformWithStateIn*``.
 - ``Exchange rangepartitioning`` outside the allowlist: a global sort
   where one wasn't designed (top-k LIMIT queries keep theirs — Spark
   plans ORDER BY+LIMIT as TakeOrderedAndProject, which never global-
@@ -57,8 +59,7 @@ GLOBAL_SORT_OK = _trait("global_sort")
 NESTED_LOOP_OK = _trait("scalar_cross")
 
 PY_NODES = re.compile(
-    r"BatchEvalPython|ArrowEvalPython|FlatMapGroupsInPandas"
-    r"|MapInPandas|AggregateInPandas|PythonMapInArrow|MapInArrow"
+    r"BatchEvalPython|Arrow\w*Python|\w*In(?:Pandas|Arrow)|TransformWithStateIn"
 )
 
 
